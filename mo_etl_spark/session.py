@@ -4,6 +4,17 @@ jx semantics (SURVEY.md §1.4) require non-ANSI math (division by zero /
 overflow -> NULL, never error) — the reference's `mo_math` (u) is
 null-decisive throughout.  Spark 4 defaults ANSI *on*, so both our own
 sessions and driver-provided sessions are normalized via ``prepare``.
+
+Sessions built by ``get_spark`` also run their Python workers through
+the engine's daemon module, ``mo_etl_spark.pyworker``.  Spark puts
+``spark-core_*.jar`` and ``pyspark.zip`` on the workers' ``sys.path``,
+and every Python task calls ``importlib.invalidate_caches()``; before
+CPython 3.12 that re-reads their directories once per ``zipimporter``
+(one per package imported from them: 16 reads, ~0.2 s of CPU) on every
+task, and the daemon skips the re-read while an archive is unchanged.
+The daemon module is a static conf, so a session that ``get_spark``
+did not create (a driver-provided one) keeps Spark's stock workers;
+``prepare`` cannot change that.
 """
 
 from __future__ import annotations
@@ -11,6 +22,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+#: the directory holding the ``mo_etl_spark`` package; Python workers
+#: need it on their path to import the daemon module and the engine's UDFs
+ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 #: runtime-settable confs applied to ANY session our queries run under
 RUNTIME_CONFS = {
@@ -47,12 +62,16 @@ def get_spark(
     app_name: str = "mo-etl-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
+    extra_confs: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for this engine.
 
     Defaults target the test rig (local[$SPARK_GRAFT_CPUS]); on a real
     cluster the same confs apply, with shuffle partitions sized by the
-    driver instead (AQE coalesces the rest).
+    driver instead (AQE coalesces the rest).  ``extra_confs`` are set
+    on the builder after the engine's own (e.g. the event log for a
+    profiling tool); static confs among them only take effect when this
+    call creates the SparkContext.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = master or f"local[{cpus}]"
@@ -86,8 +105,10 @@ def get_spark(
                 "-XX:+UseParallelGC -XX:MaxMetaspaceSize=2g -Xms8g",
             ),
         )
+        .config("spark.python.daemon.module", "mo_etl_spark.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", ENGINE_ROOT)
     )
-    for k, v in RUNTIME_CONFS.items():
+    for k, v in {**RUNTIME_CONFS, **(extra_confs or {})}.items():
         builder = builder.config(k, v)
     return prepare(builder.getOrCreate())
 

@@ -39,10 +39,13 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 #: calls load_table 1000+ times.  The memo returns the SAME unresolved
 #: scan plan for repeat calls; every execution still reads the parquet
 #: from disk (this caches a plan object, never data or results).  Keyed
-#: by the exact JVM session (different sessions may carry different
-#: reader confs), path, and source mtime (a rewritten snapshot
-#: invalidates).
-_PLAN_MEMO: dict[tuple, DataFrame] = {}
+#: by the Spark application and path, and holding the source mtime it
+#: was built at: a rewritten snapshot replaces its entry instead of
+#: adding one, and a new SparkContext (even one whose JVM session object
+#: reuses a Python ``id``) never sees a stopped one's plans.  The engine
+#: runs one session per application, with its reader confs set by
+#: ``prepare``.
+_PLAN_MEMO: dict[tuple[str, str], tuple[float, DataFrame]] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -63,10 +66,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         mtime = os.path.getmtime(path)
     except OSError:
         mtime = -1.0
-    key = (id(spark._jsparkSession), path, mtime)
+    key = (spark.sparkContext.applicationId, path)
     memo = _PLAN_MEMO.get(key)
-    if memo is not None:
-        return memo
+    if memo is not None and memo[0] == mtime:
+        return memo[1]
     df = spark.read.parquet(path)
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
@@ -74,7 +77,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         elif ts_type == "timestamp_ntz":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    _PLAN_MEMO[key] = df
+    _PLAN_MEMO[key] = (mtime, df)
     return df
 
 

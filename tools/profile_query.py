@@ -36,37 +36,18 @@ def main() -> None:
     shutil.rmtree(EVLOG, ignore_errors=True)
     os.makedirs(EVLOG, exist_ok=True)
 
-    from pyspark.sql import SparkSession
+    from mo_etl_spark.session import get_spark
 
-    # same confs as the bench session (get_spark), plus event logging
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    shuffle = 32 if cpus == "*" else max(int(cpus), 4)
-    builder = (
-        SparkSession.builder.appName("profile")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.warehouse.dir", "/root/repo/.cache/warehouse")
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-Dderby.system.home=/root/repo/.cache/derby "
-            + os.environ.get(
-                "SPARK_GRAFT_GC_OPTS",
-                "-XX:+UseParallelGC -XX:MaxMetaspaceSize=2g -Xms8g",
-            ),
-        )
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", EVLOG)
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.rolling.enabled", "false")
+    # the bench session (get_spark), plus event logging
+    spark = get_spark(
+        app_name="profile",
+        extra_confs={
+            "spark.eventLog.enabled": "true",
+            "spark.eventLog.dir": EVLOG,
+            "spark.eventLog.compress": "false",
+            "spark.eventLog.rolling.enabled": "false",
+        },
     )
-    from mo_etl_spark.session import RUNTIME_CONFS, prepare
-
-    for k, v in RUNTIME_CONFS.items():
-        builder = builder.config(k, v)
-    spark = prepare(builder.getOrCreate())
 
     import __spark_entry__ as entrymod
 

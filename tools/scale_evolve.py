@@ -56,20 +56,12 @@ def main() -> None:
     ap.add_argument("--reps", type=int, default=2)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
 
     from mo_etl_spark import streaming as S
-    from mo_etl_spark.session import prepare
+    from mo_etl_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-        )
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
-    prepare(spark)
+    spark = get_spark(app_name="scale_evolve", shuffle_partitions=32)
     out: dict[str, dict] = {}
     scales = [("small", args.small), ("large", args.large)]
     for label, n in scales:

@@ -37,44 +37,18 @@ def main() -> None:
     )
     args = ap.parse_args()
     evlog = "/tmp/spark-events-warmtime"
+    extra_confs = {}
     if args.stats:
         import shutil
 
         shutil.rmtree(evlog, ignore_errors=True)
         os.makedirs(evlog, exist_ok=True)
-        # static confs must be set before context creation: build the
-        # session here (same confs as get_spark) so the getOrCreate in
-        # get_spark reuses it
-        from pyspark.sql import SparkSession
-
-        from mo_etl_spark.session import RUNTIME_CONFS, prepare
-
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-        shuffle = 32 if cpus == "*" else max(int(cpus), 4)
-        b = (
-            SparkSession.builder.appName("warmtime")
-            .master(f"local[{cpus}]")
-            .config("spark.sql.shuffle.partitions", str(shuffle))
-            .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
-            .config("spark.ui.enabled", "false")
-            .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-            .config("spark.sql.warehouse.dir", "/root/repo/.cache/warehouse")
-            .config(
-                "spark.driver.extraJavaOptions",
-                "-Dderby.system.home=/root/repo/.cache/derby "
-                + os.environ.get(
-                    "SPARK_GRAFT_GC_OPTS",
-                    "-XX:+UseParallelGC -XX:MaxMetaspaceSize=2g -Xms8g",
-                ),
-            )
-            .config("spark.eventLog.enabled", "true")
-            .config("spark.eventLog.dir", evlog)
-            .config("spark.eventLog.compress", "false")
-            .config("spark.eventLog.rolling.enabled", "false")
-        )
-        for k, v in RUNTIME_CONFS.items():
-            b = b.config(k, v)
-        prepare(b.getOrCreate())
+        extra_confs = {
+            "spark.eventLog.enabled": "true",
+            "spark.eventLog.dir": evlog,
+            "spark.eventLog.compress": "false",
+            "spark.eventLog.rolling.enabled": "false",
+        }
 
     names = list(args.names)
     if args.top:
@@ -85,7 +59,7 @@ def main() -> None:
     import __spark_entry__ as entrymod
     from mo_etl_spark.session import get_spark
 
-    spark = get_spark(app_name="warmtime")
+    spark = get_spark(app_name="warmtime", extra_confs=extra_confs)
     qs = entrymod.queries()
     spark.read.parquet(os.path.join(args.sf, "lineitem.parquet")).count()
     spark.range(64).mapInPandas(lambda it: it, "id long").count()
