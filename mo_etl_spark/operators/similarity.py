@@ -108,8 +108,7 @@ def write_ann_index(
     from mo_etl_spark import streaming as ST
 
     os.makedirs(path, exist_ok=True)
-    lease = ST._acquire_lease(path, 3600.0)
-    try:
+    with ST._hold_lease(path, 3600.0):
         man = ST._read_manifest(path)
         now = time.time()
         gen = (man["gen"] if man else 0) + 1
@@ -177,8 +176,6 @@ def write_ann_index(
             os.remove(tmp_sidecar)
         except OSError:
             pass
-    finally:
-        ST._release_lease(path, lease)
 
 
 def load_ann_index(

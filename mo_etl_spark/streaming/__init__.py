@@ -15,12 +15,16 @@ the readStream smoke tests.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
 import socket
 import threading
-from collections.abc import Callable, Sequence
+import time
+from collections.abc import Callable, Iterable, Iterator, Sequence
+from functools import reduce
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -195,8 +199,6 @@ def _acquire_lease(root: str, ttl_sec: float) -> str:
     compactor builds into ``.compact_new.<token>``) — CAS-on-gen at
     the commit point alone decides the winner.  An unreadable lease is
     BUSY, not stale — it may be a winner mid-write."""
-    import time
-
     path = os.path.join(root, _COMPACT_LEASE)
     token = f"{os.getpid()}-{threading.get_ident()}-{time.time_ns()}"
     for attempt in range(2):
@@ -226,8 +228,9 @@ def _acquire_lease(root: str, ttl_sec: float) -> str:
                     pass
             if time.time() < expires and not pid_dead:
                 raise CompactorBusy(
-                    f"compactor lease at {path!r} is held by pid {pid} "
-                    f"until {expires:.0f}; single-compactor operation is "
+                    f"compactor lease at {path!r} is held by pid {pid} on "
+                    f"host {holder.get('host')!r} until {expires:.0f}; "
+                    "single-compactor operation is "
                     "the contract — the loser aborts instead of destroying "
                     "the winner's build"
                 )
@@ -284,6 +287,47 @@ def _release_lease(root: str, token: str) -> None:
         os.remove(path)
     except (OSError, ValueError):
         pass
+
+
+#: group commit lease bounds, shared by every group-pointer writer
+#: (txn_commit, txn_reserve, publish_branch) and evolve_schema's wait.
+#: The bounds surface a deadlock, not enforce timing: commits are
+#: ms-scale, and a 30 s wait fired spuriously under host CPU-steal
+#: storms (r12).  The TTL keeps a storm-paused committer from being
+#: reclaimed mid-commit (a dead holder is reclaimed at once by pid).
+_GROUP_LEASE_TTL_SEC = 300.0
+_LEASE_WAIT_SEC = 120.0
+
+
+@contextlib.contextmanager
+def _hold_lease(
+    root: str, ttl_sec: float, wait_sec: float = 0.0
+) -> Iterator[str]:
+    """Hold ``root``'s lease for the ``with`` body — the one way every
+    lease holder claims and releases (yields the token).  A busy lease
+    is retried every 5 ms until ``wait_sec`` has passed (0 = one
+    attempt: maintenance ops abort rather than queue), then the NAMED
+    CompactorBusy is re-raised carrying the holder's pid and host and
+    how long this claim waited.  Only the claim is retried: a
+    CompactorBusy raised by the body itself (a CAS-on-gen abort)
+    propagates as is.  Released in ``finally`` — our token only."""
+    t0 = time.monotonic()
+    while True:
+        try:
+            token = _acquire_lease(root, ttl_sec)
+            break
+        except CompactorBusy as e:
+            waited = time.monotonic() - t0
+            if waited >= wait_sec:
+                raise CompactorBusy(
+                    f"{e} (gave up after waiting {waited:.2f} s of "
+                    f"{wait_sec:g} s)"
+                ) from None
+            time.sleep(0.005)
+    try:
+        yield token
+    finally:
+        _release_lease(root, token)
 
 
 def append_tombstones(df: DataFrame, root: str) -> None:
@@ -540,7 +584,7 @@ def _group_protected_names(
 
     A txn record pins, for each member rooted here: the recorded
     generation's base, plus every batch dir at or below the txn id
-    that generation had not consumed (exactly the set _group_paths_at
+    that generation had not consumed (exactly the set _group_entries_at
     resolves).  Batch-name candidates are the union of the root
     listing and the live manifest's consumed map — a name consumed by
     a LATER generation is precisely the one that needs protecting.
@@ -655,13 +699,10 @@ def expire_snapshots(
     Lease-guarded like any maintenance op (a concurrent compactor's
     in-flight build must not race the deletes).  Returns the expired
     generation numbers."""
-    lease = _acquire_lease(root, lease_ttl_sec)
-    try:
+    with _hold_lease(root, lease_ttl_sec):
         return _expire_snapshots_locked(
             root, keep_last_n, older_than_sec, keep_last_txns
         )
-    finally:
-        _release_lease(root, lease)
 
 
 def _expire_snapshots_locked(
@@ -673,8 +714,6 @@ def _expire_snapshots_locked(
     """expire_snapshots body for callers that already hold the table's
     lease (write_ann_index runs it inside its build-commit critical
     section)."""
-    import time
-
     man = _read_manifest(root)
     log = read_manifest_log(root)
     gens = sorted(log)
@@ -738,26 +777,22 @@ def read_batched_at(
             f"log append was lost to a crash); travelable: {sorted(log)}"
         )
     base = log[gen]["base"]
-    p = base if os.path.isabs(base) else os.path.join(root, base)
-    if not os.path.isdir(p) or not any(
-        n.endswith(".parquet") for _, _, names in os.walk(p) for n in names
-    ):
+    entries = _entries(
+        [base if os.path.isabs(base) else os.path.join(root, base)], log[gen]
+    )
+    if not entries:
         raise SnapshotVacuumed(
             f"generation {gen}'s base {base!r} of {root!r} was vacuumed "
             "(retention grace expired) — the travel horizon is the vacuum "
             "window"
         )
-    if partitioned:
-        r = spark.read
-        if schema is not None:
-            r = r.schema(schema)
-        return r.parquet(p)
-    r = spark.read.option("recursiveFileLookup", "true")
-    if schema is not None:
-        r = r.schema(schema)
-    else:
-        r = r.option("mergeSchema", "true")
-    return r.parquet(p)
+    return _union(
+        spark,
+        lambda e: _read_dir(spark, e, schema, partitioned),
+        entries,
+        schema,
+        pack=False,
+    )
 
 
 def diff_batched(
@@ -962,14 +997,10 @@ def _diff_adjacent_mixed(
                 p = os.path.join(root, n)
                 if not os.path.isdir(p):
                     return None  # change file vacuumed: fall back
-                if any(
-                    f.endswith(".parquet")
-                    for _, _, fs in os.walk(p)
-                    for f in fs
-                ):
-                    r = spark.read
-                    r = r.schema(schema) if schema else r
-                    ins_events.append((r.parquet(p), g - 0.25))
+                ins_events += [
+                    (_read_dir(spark, e, schema, True), g - 0.25)
+                    for e in _entries([p])
+                ]
             tnames = set(rec.get("tombs") or {}) - set(
                 prev.get("tombs") or {}
             )
@@ -988,12 +1019,7 @@ def _diff_adjacent_mixed(
             cdir = os.path.join(root, _CHANGES, str(rec["change"]))
             if not os.path.isdir(cdir):
                 return None
-            has_pq = any(
-                f.endswith(".parquet")
-                for _, _, fs in os.walk(cdir)
-                for f in fs
-            )
-            if not has_pq:
+            if not _entries([cdir]):
                 if not os.path.exists(os.path.join(cdir, "_SUCCESS")):
                     return None
                 continue  # complete, empty delta: no events
@@ -1069,8 +1095,6 @@ def _resolve_change_events(
     is an insert (the group overlay case: a pre-window live batch
     consumed by an in-window transform re-appears in its change file);
     such keys follow the pre-existing rules instead."""
-    from functools import reduce
-
     keys = [str(k) for k in key_cols]
     if not ins_events and schema is None:
         return None  # no schema and nothing to infer one from
@@ -1177,32 +1201,23 @@ def _assemble_change_feed(
     tombstone keys, deletes = window tombstone keys minus window
     inserts (key-level, other columns null).  None when a change file
     is gone or the tombstones aren't keyed on ``key_cols``."""
-    from functools import reduce
-
     keys = [str(k) for k in key_cols]
-    ins_parts: list[DataFrame] = []
-    for n in batch_names:
-        p = os.path.join(root, n)
-        if not os.path.isdir(p):
-            return None  # change file vacuumed: fall back
-        if any(
-            f.endswith(".parquet") for _, _, fs in os.walk(p) for f in fs
-        ):
-            r = spark.read
-            r = r.schema(schema) if schema else r
-            ins_parts.append(r.parquet(p))
+    paths = [os.path.join(root, n) for n in batch_names]
+    if not all(os.path.isdir(p) for p in paths):
+        return None  # change file vacuumed: fall back
     for fp in tomb_files:
         if not os.path.exists(fp):
             return None
-    if ins_parts:
-        ins_raw = reduce(
-            lambda a, b: a.unionByName(b, allowMissingColumns=True),
-            ins_parts,
-        )
-    elif schema is not None:
-        ins_raw = spark.createDataFrame([], schema)
-    else:
+    entries = _entries(paths)
+    if not entries and schema is None:
         return None  # no schema, no insert files to infer one from
+    ins_raw = _union(
+        spark,
+        lambda e: _read_dir(spark, e, schema, True),
+        entries,
+        schema,
+        pack=False,
+    )
     tomb_keys: DataFrame | None = None
     if tomb_files:
         tk = spark.read.parquet(*list(tomb_files))
@@ -1258,8 +1273,6 @@ def diff_group_adjacent(
     ``change_feed=True`` now serve the fast path too), a change
     file vacuumed, or tombstones keyed differently.  Same
     append+retraction exactness contract as diff_batched_adjacent."""
-    from functools import reduce
-
     tlog = txn_log(group_root)
     if txn_from not in tlog or txn_to not in tlog:
         return None
@@ -1302,7 +1315,7 @@ def diff_group_adjacent(
     # return a silently lossy feed (missing inserts).  The live
     # consumed map is a superset of every generation's (names are
     # carried forever), so one check covers both vacuum paths;
-    # _group_paths_at applies the same discipline for snapshot reads.
+    # _group_entries_at applies the same discipline for snapshot reads.
     live_man = _read_manifest(root) if os.path.isdir(root) else None
     cons_later = cons_to | (set(live_man["consumed"]) if live_man else set())
     for n in cons_later - cons_from:
@@ -1337,9 +1350,8 @@ def diff_group_adjacent(
     presence_parts: list[DataFrame] = []
     covered: set[str] = set()
 
-    def _rd_batch(p: str) -> DataFrame:
-        r = spark.read
-        return (r.schema(schema) if schema else r).parquet(p)
+    def _rd_batches(p: str) -> list[DataFrame]:
+        return [_read_dir(spark, e, schema, True) for e in _entries([p])]
 
     for g in window:
         rec = mlog[g]
@@ -1361,12 +1373,7 @@ def diff_group_adjacent(
                 p = os.path.join(root, n)
                 if not os.path.isdir(p):
                     return None
-                if any(
-                    f.endswith(".parquet")
-                    for _, _, fs in os.walk(p)
-                    for f in fs
-                ):
-                    ins_events.append((_rd_batch(p), g - 0.25))
+                ins_events += [(df, g - 0.25) for df in _rd_batches(p)]
             tnames = set(rec.get("tombs") or {}) - set(
                 (prev or {}).get("tombs") or {}
             )
@@ -1389,18 +1396,13 @@ def diff_group_adjacent(
                     # txn_from — needed for the presence correction
                     if not os.path.isdir(p):
                         return None
-                    presence_parts.append(_rd_batch(p).select(*keys))
+                    presence_parts += [df.select(*keys) for df in _rd_batches(p)]
                 elif _inwin(n):
                     covered.add(n)  # the cf carries its rows
             cdir = os.path.join(root, _CHANGES, str(rec["change"]))
             if not os.path.isdir(cdir):
                 return None
-            has_pq = any(
-                f.endswith(".parquet")
-                for _, _, fs in os.walk(cdir)
-                for f in fs
-            )
-            if not has_pq:
+            if not _entries([cdir]):
                 if not os.path.exists(os.path.join(cdir, "_SUCCESS")):
                     return None
                 continue
@@ -1424,11 +1426,9 @@ def diff_group_adjacent(
     for n in batch_names:  # unconsumed-at-g_to window batches
         if n in covered or n in cons_to or n in cons_from:
             continue
-        p = os.path.join(root, n)
-        if any(
-            f.endswith(".parquet") for _, _, fs in os.walk(p) for f in fs
-        ):
-            ins_events.append((_rd_batch(p), g_to + 0.75))
+        ins_events += [
+            (df, g_to + 0.75) for df in _rd_batches(os.path.join(root, n))
+        ]
     presence = (
         reduce(lambda a, b: a.unionByName(b), presence_parts)
         if presence_parts
@@ -1542,8 +1542,7 @@ def materialize_snapshot(
         _commit_mv_cursor(mv_root, gen)  # heal a pre-cursor seed
         return
     os.makedirs(mv_root, exist_ok=True)
-    lease = _acquire_lease(mv_root, lease_ttl_sec)
-    try:
+    with _hold_lease(mv_root, lease_ttl_sec):
         if os.path.exists(os.path.join(dst, "_SUCCESS")):
             _commit_mv_cursor(mv_root, gen)
             return  # a racing seeder finished while we claimed
@@ -1551,8 +1550,6 @@ def materialize_snapshot(
             spark, root, gen, schema, partitioned=partitioned
         ).write.mode("overwrite").parquet(dst)
         _commit_mv_cursor(mv_root, gen)  # the seed's commit point
-    finally:
-        _release_lease(mv_root, lease)
 
 
 def apply_change_feed(
@@ -1627,8 +1624,7 @@ def apply_change_feed(
         )
     if cur >= gen_to:
         return cur
-    lease = _acquire_lease(mv_root, lease_ttl_sec)
-    try:
+    with _hold_lease(mv_root, lease_ttl_sec):
         # re-resolve under the lease: a consumer that raced us here may
         # have advanced the MV while we waited for the claim
         cur = _resolve()
@@ -1657,8 +1653,6 @@ def apply_change_feed(
         out.write.mode("overwrite").parquet(os.path.join(mv_root, f"g{gen_to}"))
         _commit_mv_cursor(mv_root, gen_to)  # the application's commit
         return gen_to
-    finally:
-        _release_lease(mv_root, lease)
 
 
 def change_feed_consumer(
@@ -1723,8 +1717,7 @@ def materialize_snapshot_batched(
     os.makedirs(mv_root, exist_ok=True)
     if read_mv_cursor(mv_root) is not None:
         return
-    lease = _acquire_lease(mv_root, 3600.0)
-    try:
+    with _hold_lease(mv_root, 3600.0):
         if read_mv_cursor(mv_root) is not None:
             return
         idempotent_batch_write(
@@ -1733,8 +1726,6 @@ def materialize_snapshot_batched(
             gen,
         )
         _commit_mv_cursor(mv_root, gen)
-    finally:
-        _release_lease(mv_root, lease)
 
 
 def apply_change_feed_batched(
@@ -1785,8 +1776,7 @@ def apply_change_feed_batched(
         )
     if cur >= gen_to:
         return cur
-    lease = _acquire_lease(mv_root, lease_ttl_sec)
-    try:
+    with _hold_lease(mv_root, lease_ttl_sec):
         cur = read_mv_cursor(mv_root)
         if cur is None or cur >= gen_to:
             return cur if cur is not None else gen_to
@@ -1844,8 +1834,6 @@ def apply_change_feed_batched(
         idempotent_batch_write(ins.coalesce(1), mv_root, gen_to)
         _commit_mv_cursor(mv_root, gen_to)
         return gen_to
-    finally:
-        _release_lease(mv_root, lease)
 
 
 def read_materialized_batched(
@@ -1898,8 +1886,7 @@ def materialize_group_member(
     os.makedirs(mv_root, exist_ok=True)
     if read_mv_cursor(mv_root) is not None:
         return
-    lease = _acquire_lease(mv_root, 3600.0)
-    try:
+    with _hold_lease(mv_root, 3600.0):
         if read_mv_cursor(mv_root) is not None:
             return
         snap = read_group_at(
@@ -1907,8 +1894,6 @@ def materialize_group_member(
         )
         idempotent_batch_write(snap.coalesce(4), mv_root, txn + 1)
         _commit_mv_cursor(mv_root, txn)
-    finally:
-        _release_lease(mv_root, lease)
 
 
 def reseed_group_member(
@@ -1928,16 +1913,13 @@ def reseed_group_member(
     names after an evolution).  The rebuild costs one snapshot read —
     exactly what Delta consumers pay after a schema-incompatible CDF
     break."""
-    import shutil as _sh
-
-    lease = _acquire_lease(mv_root, 3600.0)
-    try:
+    with _hold_lease(mv_root, 3600.0):
         for d in sorted(os.listdir(mv_root)) if os.path.isdir(mv_root) else []:
             p = os.path.join(mv_root, d)
             if d.startswith("b") and os.path.isdir(p):
-                _sh.rmtree(p, ignore_errors=True)
+                shutil.rmtree(p, ignore_errors=True)
             elif d == _TOMBSTONES and os.path.isdir(p):
-                _sh.rmtree(p, ignore_errors=True)
+                shutil.rmtree(p, ignore_errors=True)
         try:
             os.remove(os.path.join(mv_root, _MV_CURSOR))
         except FileNotFoundError:
@@ -1947,8 +1929,6 @@ def reseed_group_member(
         )
         idempotent_batch_write(snap.coalesce(4), mv_root, txn + 1)
         _commit_mv_cursor(mv_root, txn)
-    finally:
-        _release_lease(mv_root, lease)
 
 
 def apply_group_feed_batched(
@@ -1980,8 +1960,7 @@ def apply_group_feed_batched(
         )
     if cur >= txn_to:
         return cur
-    lease = _acquire_lease(mv_root, lease_ttl_sec)
-    try:
+    with _hold_lease(mv_root, lease_ttl_sec):
         cur = read_mv_cursor(mv_root)
         if cur is None or cur >= txn_to:
             return cur if cur is not None else txn_to
@@ -2059,8 +2038,6 @@ def apply_group_feed_batched(
         idempotent_batch_write(ins.coalesce(1), mv_root, txn_to + 1)
         _commit_mv_cursor(mv_root, txn_to)
         return txn_to
-    finally:
-        _release_lease(mv_root, lease)
 
 
 def prune_materialized(mv_root: str, keep_last_n: int) -> list[int]:
@@ -2071,8 +2048,6 @@ def prune_materialized(mv_root: str, keep_last_n: int) -> list[int]:
     newest complete generation is never deleted (``keep_last_n`` is
     floored at 1): it is the consumer's resume point.  Returns the
     generation numbers removed."""
-    import shutil as _sh
-
     latest = latest_materialized_gen(mv_root)
     if latest is None:
         return []
@@ -2092,7 +2067,7 @@ def prune_materialized(mv_root: str, keep_last_n: int) -> list[int]:
     keep = set(sorted(complete)[-max(int(keep_last_n), 1):])
     removed = sorted(set(complete) - keep | set(debris))
     for g in removed:
-        _sh.rmtree(os.path.join(mv_root, f"g{g}"), ignore_errors=True)
+        shutil.rmtree(os.path.join(mv_root, f"g{g}"), ignore_errors=True)
     return removed
 
 
@@ -2115,10 +2090,7 @@ def rollback_batched(root: str, gen: int, lease_ttl_sec: float = 3600.0) -> int:
     excluded.  A stream resumed after a rollback should restart from a
     fresh checkpoint (or accept that in-flight-at-rollback batches are
     gone — they are exactly the data the operator rolled back)."""
-    import time
-
-    lease = _acquire_lease(root, lease_ttl_sec)
-    try:
+    with _hold_lease(root, lease_ttl_sec):
         log = read_manifest_log(root)
         if gen not in log:
             raise SnapshotVacuumed(
@@ -2148,10 +2120,7 @@ def rollback_batched(root: str, gen: int, lease_ttl_sec: float = 3600.0) -> int:
         # never owned, never delete")
         cur_live = cur["base"] if cur else "base"
         for d in _live_dirs(root):
-            if os.path.isabs(cur_live) and d == cur_live:
-                name = d
-            else:
-                name = os.path.basename(d)
+            name = d if d == cur_live else os.path.basename(d)
             if name != base:
                 consumed.setdefault(name, now)
         new_gen = (cur["gen"] if cur else 0) + 1
@@ -2179,8 +2148,6 @@ def rollback_batched(root: str, gen: int, lease_ttl_sec: float = 3600.0) -> int:
             tombs=cur.get("tombs") if cur else None,
         )
         return new_gen
-    finally:
-        _release_lease(root, lease)
 
 
 #: cross-table transaction pointer — the Delta multi-table-txn twin
@@ -2251,32 +2218,11 @@ def txn_commit(
     ABANDONED branch's data can never leak into main reads after a
     competing commit pushes the watermark past its staged ids; see
     drop_branch."""
-    import time as _time
-
     os.makedirs(group_root, exist_ok=True)
-    # Bounds exist to surface a deadlock, not to enforce timing:
-    # commits are ms-scale, so a generous bound changes nothing on a
-    # healthy box while surviving the multi-second CPU-steal storms
-    # this sandbox exhibits (a 30 s bound fired spuriously under host
-    # contention in a driver verify run — r12 deflake).
-    wait_deadline = _time.monotonic() + 120.0
+    wait_deadline = time.monotonic() + 120.0
     while True:
-        lease = None
-        deadline = _time.monotonic() + 120.0  # commits are ms-scale
-        while True:
-            try:
-                # TTL reclaim only matters for a LIVE holder pid (a
-                # dead holder is reclaimed instantly via the pid
-                # check); 300 s keeps a storm-paused committer from
-                # being reclaimed out from under mid-commit
-                lease = _acquire_lease(group_root, 300.0)
-                break
-            except CompactorBusy:
-                if _time.monotonic() >= deadline:
-                    raise
-                _time.sleep(0.005)
         pend_live = False
-        try:
+        with _hold_lease(group_root, _GROUP_LEASE_TTL_SEC, _LEASE_WAIT_SEC):
             if branch is not None:
                 return _txn_commit_locked(
                     group_root, batch_id, tables, branch
@@ -2310,7 +2256,7 @@ def txn_commit(
                         ts, ttl = float(rec["ts"]), float(rec["ttl"])
                     except (KeyError, TypeError, ValueError):
                         ts, ttl = 0.0, 0.0
-                    if _time.time() - ts >= ttl:
+                    if time.time() - ts >= ttl:
                         _sweep_expired_reservation(group_root, rid, rec)
                     else:
                         pend_live = True
@@ -2329,18 +2275,16 @@ def txn_commit(
                 except FileNotFoundError:
                     pass
                 return out
-        finally:
-            _release_lease(group_root, lease)
         # only the live-lower-reservation path falls through: wait
         # OUTSIDE the lease (holding it would deadlock the slower
         # writer's own confirm), bounded and NAMED
-        if _time.monotonic() >= wait_deadline:
+        if time.monotonic() >= wait_deadline:
             raise ReservationPending(
                 f"txn {batch_id} on {group_root!r} waited out its bound "
                 "for a lower unresolved reservation — retry after the "
                 "slower writer confirms or its reservation expires"
             )
-        _time.sleep(0.05)
+        time.sleep(0.05)
 
 
 def _validate_branch(branch: str) -> None:
@@ -2469,15 +2413,15 @@ def txn_log(group_root: str) -> dict[int, dict]:
     return out
 
 
-def _group_paths_at(
+def _group_entries_at(
     group_root: str, txn_id: int, alias: str
-) -> tuple[str, list[str], int | None]:
-    """Resolve the on-disk dirs making up one group member's state at
-    transaction ``txn_id`` (read_group_at / read_group_at_pruned
-    share this): the recorded generation's base + unconsumed batch
-    dirs ≤ the txn.  Returns (member root, paths, the external seed
-    base's committed spec_n claim or None).  Raises the NAMED
-    SnapshotVacuumed past any horizon."""
+) -> list[_DirEntry]:
+    """Resolve the non-empty dirs making up one group member's state at
+    transaction ``txn_id`` (read_group_at / read_group_at_pruned share
+    this): the recorded generation's base + unconsumed batch dirs ≤
+    the txn, resolved against that generation's manifest record (so an
+    external seed base carries its committed spec/layout claim).
+    Raises the NAMED SnapshotVacuumed past any horizon."""
     log = txn_log(group_root)
     if txn_id not in log:
         raise SnapshotVacuumed(
@@ -2490,21 +2434,10 @@ def _group_paths_at(
             f"group {group_root!r} txn {txn_id} has no member {alias!r}; "
             f"members: {sorted(log[txn_id]['tables'])}"
         )
-    return _member_paths_for(member, txn_id, alias)
-
-
-def _member_paths_for(
-    member: dict, txn_id: int, alias: str
-) -> tuple[str, list[str], int | None]:
-    """Resolve one member's on-disk dirs from a txn RECORD's member
-    entry ({"root", "gen"}) at watermark ``txn_id`` — shared by group
-    time travel (_group_paths_at) and the branch audit read
-    (read_branch_head), which resolves from a staged record instead
-    of the main log."""
     root, gen = member["root"], int(member["gen"])
     paths: list[str] = []
     consumed_at_gen: set[str] = set()
-    seed_spec: int | None = None
+    rec: dict | None = None
     mlog = read_manifest_log(root) if os.path.isdir(root) else {}
     if gen in mlog:
         rec = mlog[gen]
@@ -2517,15 +2450,7 @@ def _member_paths_for(
                 "was vacuumed — the group travel horizon is the member's "
                 "vacuum window"
             )
-        if os.path.isabs(base) and isinstance(rec.get("extra"), dict):
-            try:
-                seed_spec = int(rec["extra"]["spec_n"])
-            except (KeyError, TypeError, ValueError):
-                seed_spec = None
-        if any(
-            n.endswith(".parquet") for _, _, ns in os.walk(p) for n in ns
-        ):
-            paths.append(p)
+        paths.append(p)
     elif gen > 0:
         raise SnapshotVacuumed(
             f"member {alias!r} of group txn {txn_id} recorded generation "
@@ -2559,14 +2484,8 @@ def _member_paths_for(
             continue
         if int(d[1:]) > txn_id or d in consumed_at_gen:
             continue
-        p = os.path.join(root, d)
-        if not os.path.isdir(p):
-            continue
-        if any(
-            n.endswith(".parquet") for _, _, ns in os.walk(p) for n in ns
-        ):
-            paths.append(p)
-    return root, paths, seed_spec
+        paths.append(os.path.join(root, d))
+    return _entries(paths, rec)
 
 
 def read_group_at_pruned(
@@ -2581,37 +2500,22 @@ def read_group_at_pruned(
 ) -> DataFrame:
     """SPEC-AWARE historical matched-bucket read of a group member
     (r10 — the group twin of read_batched_pruned): resolve the
-    member's dirs at the txn (_group_paths_at), then prune each with a
-    ``col IN (...)`` list TRANSLATED to the dir's own committed spec —
-    a member re-bucketed between the txn and the read still serves the
-    historical probe exactly (pre-rebucket batch dirs carry their
+    member's dirs at the txn (_group_entries_at), then prune each with
+    a ``col IN (...)`` list TRANSLATED to the dir's own committed spec
+    — a member re-bucketed between the txn and the read still serves
+    the historical probe exactly (pre-rebucket batch dirs carry their
     writer's stamp; a verbatim-consolidated mixed base is unstamped
-    and scans unpruned, the safe direction — same discipline as the
-    live pruned read).  Empty ``values`` short-circuits."""
-    from functools import reduce
-
+    and scans unpruned, the safe direction — same leg as the live
+    pruned read).  Empty ``values`` short-circuits."""
     if not values:
         return spark.createDataFrame([], schema)
-    root, paths, seed_spec = _group_paths_at(group_root, txn_id, alias)
-    parts: list[DataFrame] = []
-    for p in paths:
-        # only an EXTERNAL seed base (outside the member root) takes
-        # its spec from the manifest claim; every root-local dir
-        # answers via its own stamp — all paths here are absolute, so
-        # containment (not isabs) is the discriminator
-        external = os.path.dirname(p) != os.path.normpath(root)
-        m = seed_spec if external else dir_spec(p)
-        df = spark.read.schema(schema).parquet(p)
-        if m is not None:
-            vals = spec_values(values, values_spec_n, m)
-            if vals is not None:
-                df = df.where(
-                    F.col(col).isin(vals) if vals else F.lit(False)
-                )
-        parts.append(df)
-    if not parts:
-        return spark.createDataFrame([], schema)
-    return reduce(lambda a, b: a.unionByName(b), parts)
+    return _union(
+        spark,
+        _spec_leg(spark, col, values, values_spec_n, schema),
+        _group_entries_at(group_root, txn_id, alias),
+        schema,
+        pack=False,
+    )
 
 
 def read_group_at(
@@ -2635,39 +2539,18 @@ def read_group_at(
     tolerated commit/log crash window is simply not travelable).
     Same read semantics as read_batched: pending tombstones are a
     probe-time overlay, not part of the snapshot."""
-    from functools import reduce
-
-    root, paths, _ = _group_paths_at(group_root, txn_id, alias)
-    if not paths:
-        if schema is not None:
-            return spark.createDataFrame([], schema)
+    entries = _group_entries_at(group_root, txn_id, alias)
+    if not entries and schema is None:
         raise SnapshotVacuumed(
             f"member {alias!r} has no surviving files at group txn "
             f"{txn_id} (pass schema= for an empty read)"
         )
-
-    def rd(p: str) -> DataFrame:
-        r = spark.read
-        # per-PATH layout detection (r11, found by the re-seed test):
-        # even under partitioned=True, a BINPACK base (nested g<i>
-        # group subdirs, no hive col= dirs) needs the recursive
-        # lookup — the hive-discovery read lists only the top level
-        # and silently drops every nested file's rows
-        hive = os.path.isdir(p) and any(
-            "=" in n and os.path.isdir(os.path.join(p, n))
-            for n in os.listdir(p)
-        )
-        if not (partitioned and hive):
-            r = r.option("recursiveFileLookup", "true")
-        if schema is not None:
-            r = r.schema(schema)
-        elif not partitioned:
-            r = r.option("mergeSchema", "true")
-        return r.parquet(p)
-
-    return reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True),
-        [rd(p) for p in paths],
+    return _union(
+        spark,
+        lambda e: _read_dir(spark, e, schema, partitioned),
+        entries,
+        schema,
+        pack=False,
     )
 
 
@@ -2745,20 +2628,8 @@ def txn_reserve(
     the NAMED ReservationExpired instead of silent loss), and raises
     the NAMED ReservationPending if the wait runs out — the watermark
     never jumps a live writer's rows."""
-    import time as _time
-
     os.makedirs(group_root, exist_ok=True)
-    lease = None
-    deadline = _time.monotonic() + 30.0
-    while True:
-        try:
-            lease = _acquire_lease(group_root, 60.0)
-            break
-        except CompactorBusy:
-            if _time.monotonic() >= deadline:
-                raise
-            _time.sleep(0.005)
-    try:
+    with _hold_lease(group_root, _GROUP_LEASE_TTL_SEC, _LEASE_WAIT_SEC):
         w = txn_watermark(group_root)
         top = -1 if w is None else int(w)
         for rid in list_reservations(group_root):
@@ -2785,13 +2656,11 @@ def txn_reserve(
             {
                 "txn": rid,
                 "tables": {a: r for a, r in tables.items()},
-                "ts": _time.time(),
+                "ts": time.time(),
                 "ttl": float(ttl_sec),
             },
         )
         return rid
-    finally:
-        _release_lease(group_root, lease)
 
 
 def list_reservations(group_root: str) -> dict[int, dict]:
@@ -3007,37 +2876,26 @@ def read_branch_head(
             f"members: {sorted(rec['tables'])}"
         )
     root, head = member["root"], int(rec["txn"])
-    df = read_batched(
-        spark, root, partitioned=partitioned, schema=schema,
-        max_batch=head,
+    return _union(
+        spark,
+        lambda e: _read_dir(spark, e, schema, partitioned),
+        _live_entries(root, None, head) + _staged_dirs(root, branch, head),
+        schema,
     )
-    for p in _staged_dirs(root, branch, head):
-        r = spark.read
-        if not partitioned:
-            r = r.option("recursiveFileLookup", "true")
-        if schema is not None:
-            r = r.schema(schema)
-        df = df.unionByName(r.parquet(p), allowMissingColumns=True)
-    return df
 
 
-def _staged_dirs(root: str, branch: str, max_id: int) -> list[str]:
-    """This branch's staged batch dirs (``b<id>.stage.<branch>``)
-    with id <= max_id, complete files only."""
+def _staged_dirs(root: str, branch: str, max_id: int) -> list[_DirEntry]:
+    """This branch's non-empty staged batch dirs
+    (``b<id>.stage.<branch>``) with id <= max_id."""
     suffix = f".stage.{branch}"
-    out: list[str] = []
-    for d in sorted(os.listdir(root)) if os.path.isdir(root) else []:
-        if not (d.startswith("b") and d.endswith(suffix)):
-            continue
-        mid = d[1:-len(suffix)]
-        if not mid.isdigit() or int(mid) > max_id:
-            continue
-        p = os.path.join(root, d)
-        if os.path.isdir(p) and any(
-            n.endswith(".parquet") for _, _, ns in os.walk(p) for n in ns
-        ):
-            out.append(p)
-    return out
+    return _entries(
+        os.path.join(root, d)
+        for d in (sorted(os.listdir(root)) if os.path.isdir(root) else [])
+        if d.startswith("b")
+        and d.endswith(suffix)
+        and d[1:-len(suffix)].isdigit()
+        and int(d[1:-len(suffix)]) <= max_id
+    )
 
 
 def publish_branch(group_root: str, branch: str) -> int:
@@ -3060,20 +2918,8 @@ def publish_branch(group_root: str, branch: str) -> int:
     narrowed history, exactly like a main commit's lost entry —
     except the HEAD, whose record is the branch pointer itself.
     Returns the published watermark."""
-    import time as _time
-
     _validate_branch(branch)
-    lease = None
-    deadline = _time.monotonic() + 30.0
-    while True:
-        try:
-            lease = _acquire_lease(group_root, 60.0)
-            break
-        except CompactorBusy:
-            if _time.monotonic() >= deadline:
-                raise
-            _time.sleep(0.005)
-    try:
+    with _hold_lease(group_root, _GROUP_LEASE_TTL_SEC, _LEASE_WAIT_SEC):
         rec = txn_branch_vector(group_root, branch)
         if rec is None:
             raise ValueError(
@@ -3098,8 +2944,8 @@ def publish_branch(group_root: str, branch: str) -> int:
         for alias, member in rec["tables"].items():
             root = member["root"]
             suffix = f".stage.{branch}"
-            for p in _staged_dirs(root, branch, head):
-                dst = p[: -len(suffix)]
+            for e in _staged_dirs(root, branch, head):
+                p, dst = e.path, e.path[: -len(suffix)]
                 if os.path.exists(os.path.join(dst, "_SUCCESS")):
                     shutil.rmtree(p, ignore_errors=True)  # replay
                     continue
@@ -3123,8 +2969,6 @@ def publish_branch(group_root: str, branch: str) -> int:
         )  # THE visibility event
         _cleanup_branch(group_root, branch)
         return head
-    finally:
-        _release_lease(group_root, lease)
 
 
 def _atomic_put_json(path: str, rec: dict, fsync_dir: bool = False) -> None:
@@ -3225,25 +3069,13 @@ def evolve_schema(
     coalesce-based mixed-dir read ambiguous).  Requires a manifest
     (fold at least once before evolving).  Returns the new
     generation."""
-    import time as _time
-
     ren = dict(rename or {})
     drops = [str(c) for c in (drop or [])]
     if not ren and not drops:
         raise ValueError("evolve_schema: nothing to do")
-    # the op itself is metadata-scale; retry briefly through a racing
-    # fold's lease (txn_commit's discipline) before surfacing NAMED
-    lease = None
-    deadline = _time.monotonic() + 30.0
-    while True:
-        try:
-            lease = _acquire_lease(root, lease_ttl_sec)
-            break
-        except CompactorBusy:
-            if _time.monotonic() >= deadline:
-                raise
-            _time.sleep(0.05)
-    try:
+    # the op itself is metadata-scale; wait through a racing fold's
+    # lease (txn_commit's bound) before surfacing NAMED
+    with _hold_lease(root, lease_ttl_sec, _LEASE_WAIT_SEC):
         man = _read_manifest(root)
         if man is None:
             raise ValueError(
@@ -3262,41 +3094,25 @@ def evolve_schema(
         from pyspark.errors import AnalysisException
 
         live: set[str] = set()
-        for p in _live_dirs(root):
-            name = os.path.basename(p)
+        entries = _entries(_live_dirs(root), man)
+        for e in entries:
+            name = os.path.basename(e.path)
             if (
                 name.startswith("b")
                 and name[1:].isdigit()
-                and not os.path.exists(os.path.join(p, "_SUCCESS"))
+                and not os.path.exists(os.path.join(e.path, "_SUCCESS"))
             ):
                 continue
-            if not any(
-                n.endswith(".parquet")
-                for _, _, ns in os.walk(p)
-                for n in ns
-            ):
-                continue
-            hive = any(
-                "=" in n and os.path.isdir(os.path.join(p, n))
-                for n in os.listdir(p)
-            )
-            r = spark.read
-            if not hive:
-                r = r.option("recursiveFileLookup", "true")
             try:
                 live |= set(
-                    apply_schema_ops(r.parquet(p), ops).columns
+                    apply_schema_ops(_read_dir(spark, e, None, True), ops).columns
                 )
             except AnalysisException:
                 continue
         # partition columns are LAYOUT, not schema: renaming one would
         # orphan every hive dir name; that migration is a rebucket/
         # re-layout fold's job, not a metadata op
-        part_cols: set[str] = set()
-        for p in _live_dirs(root):
-            for n in os.listdir(p):
-                if "=" in n and os.path.isdir(os.path.join(p, n)):
-                    part_cols.add(n.split("=", 1)[0])
+        part_cols = set().union(*(e.hive for e in entries))
         for c in set(ren) | set(ren.values()) | set(drops):
             if c in part_cols:
                 raise ValueError(
@@ -3346,8 +3162,6 @@ def evolve_schema(
             extra=prior_extra, tombs=man.get("tombs") or None,
         )  # no plain/change marker: CDF windows crossing this fall back
         return gen
-    finally:
-        _release_lease(root, lease)
 
 
 def read_batched_evolved(
@@ -3362,29 +3176,12 @@ def read_batched_evolved(
     the result.  Until a normalize fold has rewritten the rows, this
     is THE exact reader for an evolved table — a plain explicit-schema
     read of a pre-rename dir yields nulls for renamed columns."""
-    from functools import reduce
-
     ops = schema_ops(root)
-    parts: list[DataFrame] = []
-    for p in _live_dirs(root, None, max_batch):
-        if not any(
-            n.endswith(".parquet") for _, _, ns in os.walk(p) for n in ns
-        ):
-            continue
-        hive = any(
-            "=" in n and os.path.isdir(os.path.join(p, n))
-            for n in os.listdir(p)
-        )
-        r = spark.read
-        if not hive:
-            r = r.option("recursiveFileLookup", "true")
-        parts.append(apply_schema_ops(r.parquet(p), ops))
-    if not parts:
-        if schema is not None:
-            return spark.createDataFrame([], schema)
-        raise ValueError(f"read_batched_evolved: {root!r} has no files")
-    df = reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
+    df = _union(
+        spark,
+        lambda e: apply_schema_ops(_read_dir(spark, e, None, True), ops),
+        _live_entries(root, None, max_batch),
+        schema,
     )
     if schema is not None:
         df = _align_to(df, spark.createDataFrame([], schema).schema.fields)
@@ -3423,8 +3220,8 @@ def drop_branch(group_root: str, branch: str) -> None:
         logged = set(txn_log(group_root))
         for member in rec["tables"].values():
             root = member["root"]
-            for p in _staged_dirs(root, branch, 1 << 62):
-                shutil.rmtree(p, ignore_errors=True)
+            for e in _staged_dirs(root, branch, 1 << 62):
+                shutil.rmtree(e.path, ignore_errors=True)
             # a publish that crashed AFTER renaming staged dirs into
             # their b<id> names left them as uncommitted main-path
             # dirs; dropping the branch without removing them would
@@ -3492,28 +3289,153 @@ def _live_dirs(
     return out
 
 
-def _dir_parquet_bytes(path: str) -> int:
-    """Total bytes of .parquet files under ``path`` (one recursive
-    walk; 0 means the dir holds no data files).  Callers use the same
-    walk for BOTH the emptiness check and _pack_union's sizing, so the
-    listing cost is paid once per dir per evaluation (ADVICE r11)."""
-    total = 0
-    for base, _dirs, names in os.walk(path):
-        for n in names:
-            if n.endswith(".parquet"):
+class _DirEntry(NamedTuple):
+    """One resolved, NON-EMPTY directory of a batched table — the
+    per-directory half of the format, decided in one place (_entries):
+    its non-empty ``.parquet`` files as ``(path, bytes)``, their
+    summed ``nbytes``, the partition ``spec`` and derived
+    ``layout`` its rows were written under (None = unstamped, scan
+    unpruned), and ``hive`` — the ``col=value`` partition columns at its
+    top level (empty = flat or binpack-nested, read recursively)."""
+
+    path: str
+    files: tuple[tuple[str, int], ...]
+    nbytes: int
+    spec: int | None
+    layout: str | None
+    hive: frozenset[str]
+
+
+def _entries(paths: Iterable[str], rec: dict | None = None) -> list[_DirEntry]:
+    """THE per-directory resolver: one ``os.walk`` per dir, whose first
+    step (the top-level names) also yields the spec/layout stamps and
+    the hive-ness.  Dirs holding no parquet bytes are DROPPED here —
+    the one emptiness rule of the format (an empty trigger writes only
+    ``_SUCCESS``; a vacuumed or missing dir walks to nothing).
+    Zero-byte ``.parquet`` files count as no data: Spark's scan already
+    skips zero-length files, so skipping them changes no rows — it only
+    keeps schema inference (and a binpack fold's footer reads) off a
+    file that has no footer.
+
+    ``rec`` is the committed manifest record the paths were resolved
+    from: when its ``base`` is an EXTERNAL seed snapshot (absolute,
+    immutable, unstampable — seed_batched), that dir takes its spec and
+    layout from the record's ``extra`` claim (``spec_n`` /
+    ``layout_id``), committed atomically with the reference; every
+    other dir — a compacted base included — answers for its own rows
+    via its own stamps (a verbatim fold of mixed-spec inputs is
+    unstamped, and claiming the writer-facing ``spec_n`` for it would
+    prune older-spec rows away)."""
+    seed = rec["base"] if rec and os.path.isabs(rec["base"]) else None
+    out: list[_DirEntry] = []
+    for p in paths:
+        files: list[tuple[str, int]] = []
+        top: tuple[list[str], list[str]] | None = None
+        for d, subdirs, names in os.walk(p):
+            top = top or (subdirs, names)
+            for n in sorted(names):
+                if not n.endswith(".parquet"):
+                    continue
                 try:
-                    total += os.path.getsize(os.path.join(base, n))
+                    size = os.path.getsize(os.path.join(d, n))
                 except OSError:
-                    pass
-    return total
+                    continue
+                if size:
+                    files.append((os.path.join(d, n), size))
+        if not files:
+            continue
+        stamps = top[1]
+        if p == seed:
+            extra = rec.get("extra") if isinstance(rec.get("extra"), dict) else {}
+            claims = ((_SPEC_PREFIX, "spec_n"), (_LAYOUT_PREFIX, "layout_id"))
+            stamps = [
+                f"{prefix}{extra[key]}"
+                for prefix, key in claims
+                if extra.get(key) is not None
+            ]
+        out.append(
+            _DirEntry(
+                p,
+                tuple(files),
+                sum(sz for _, sz in files),
+                *_stamps(stamps),
+                frozenset(n.split("=", 1)[0] for n in top[0] if "=" in n),
+            )
+        )
+    return out
 
 
-def _pack_union(
+def _live_entries(
+    root: str, exclude_batch: int | None = None, max_batch: int | None = None
+) -> list[_DirEntry]:
+    """The live dirs (_live_dirs) resolved against the live manifest."""
+    if not os.path.isdir(root):
+        return []
+    return _entries(_live_dirs(root, exclude_batch, max_batch), _read_manifest(root))
+
+
+def _read_dir(
     spark: SparkSession,
-    df: DataFrame,
-    paths: Sequence[str],
-    total_bytes: int | None = None,
+    e: _DirEntry,
+    schema: str | None = None,
+    partitioned: bool = False,
 ) -> DataFrame:
+    """THE per-dir read.  Recursive file lookup unless the caller wants
+    hive partition columns AND the dir has them: a BINPACK base nests
+    its files in ``g<i>`` subdirs, and a hive-discovery read of it
+    lists nothing — every one of its rows would silently drop (r11
+    re-seed test; the binpack-base regression test).  ``schema`` skips
+    footer inference; without one, a flat read merges footers so an
+    additively evolved table yields the union schema."""
+    r = spark.read
+    if not (partitioned and e.hive):
+        r = r.option("recursiveFileLookup", "true")
+    if schema is not None:
+        r = r.schema(schema)
+    elif not partitioned:
+        r = r.option("mergeSchema", "true")
+    return r.parquet(e.path)
+
+
+def _union(
+    spark: SparkSession,
+    leg: Callable[[_DirEntry], DataFrame],
+    entries: Sequence[_DirEntry],
+    schema: str | None = None,
+    pack: bool = True,
+) -> DataFrame:
+    """THE multi-dir union: one ``leg`` per entry (per-dir reads — Spark
+    cannot partition-discover several roots in one relation, and
+    static per-leg filters are how pruning reaches each scan), unioned
+    by name with allowMissingColumns (dirs from before an additive
+    schema change lack the newer columns — null-filled, not failed),
+    then packed by the entries' summed bytes (_pack_union).  No
+    entries: the typed empty table when ``schema`` is given, else a
+    named error.
+
+    ``pack=False`` is for HISTORICAL reads (time travel, change-feed
+    windows): their dirs are no longer live, so a zero-grace vacuum
+    may reclaim them once the snapshot leaves its retention pin.
+    Packing serializes the scan into ceil(bytes / split) tasks that
+    read the files one after another, which stretches the read past
+    that point — the WAP threaded model's travel reader then lost a
+    vacuumed batch file mid-scan; the unpacked parallel scan does not."""
+    if not entries:
+        if schema is None:
+            raise ValueError(
+                "no live data files to read (pass schema= for an empty read)"
+            )
+        return spark.createDataFrame([], schema)
+    df = reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True),
+        [leg(e) for e in entries],
+    )
+    if not pack:
+        return df
+    return _pack_union(spark, df, sum(e.nbytes for e in entries))
+
+
+def _pack_union(spark: SparkSession, df: DataFrame, total_bytes: int) -> DataFrame:
     """SCALE-ADAPTIVE TASK PACKING for multi-dir unions (r11
     optimization; guide §6 small files, §2.2 fewer map tasks).
 
@@ -3529,15 +3451,9 @@ def _pack_union(
     a handful of tasks; at 100 TB the target exceeds the union's
     partition count and coalesce is a no-op (it never increases
     partitions).  Sits ABOVE the per-leg scans, so per-leg partition
-    pruning / static probed-cell filters are untouched.
-
-    ``total_bytes`` lets callers that already walked the dirs (the
-    emptiness check) pass the summed size instead of paying a second
-    O(files) driver-side listing per evaluation (ADVICE r11 — per
-    trigger in streaming sinks, several times per maintenance fold;
-    an object-store anti-pattern if this ever leaves local FS)."""
-    if total_bytes is None:
-        total_bytes = sum(_dir_parquet_bytes(p) for p in paths)
+    pruning / static probed-cell filters are untouched.  The bytes
+    come from the resolver's one walk per dir (ADVICE r11), never a
+    second listing."""
     max_split = _size_conf_bytes(
         spark, "spark.sql.files.maxPartitionBytes", 128 * 1024 * 1024
     )
@@ -3599,7 +3515,21 @@ def read_batched(
 
     ``max_batch`` (r10) restricts the union to batch dirs at or below
     the given id — pass a cross-table ``txn_watermark`` for a
-    torn-window-free read of one member of a multi-table group."""
+    torn-window-free read of one member of a multi-table group.
+
+    The partitioned read resolves every live dir (_entries: one walk
+    each), so empty dirs and zero-byte files drop out there.  The flat
+    read is the hot path: ONE multi-path relation over _live_dirs,
+    walking nothing — with ``schema=`` Spark's scan skips a zero-byte
+    ``.parquet`` file by itself; without one, footer inference still
+    fails loudly on such a file (it has no footer)."""
+    if partitioned:
+        return _union(
+            spark,
+            lambda e: _read_dir(spark, e, schema, partitioned=True),
+            _live_entries(root, exclude_batch, max_batch),
+            schema,
+        )
     paths = (
         _live_dirs(root, exclude_batch, max_batch)
         if os.path.isdir(root)
@@ -3611,40 +3541,6 @@ def read_batched(
         raise ValueError(
             f"read_batched: no live subdirectories under {root!r} "
             "(seed the table or pass schema= for an empty read)"
-        )
-    if partitioned:
-        from functools import reduce
-
-        # an empty batch writes only _SUCCESS (no partition dirs, no
-        # schema to infer) — skip such roots rather than failing the
-        # whole union.  One walk per dir serves both the emptiness
-        # check and the _pack_union sizing (ADVICE r11).
-        sizes = {p: _dir_parquet_bytes(p) for p in paths}
-        nonempty = [p for p in paths if sizes[p] > 0]
-        if not nonempty:
-            if schema is not None:
-                return spark.createDataFrame([], schema)
-            raise ValueError(
-                f"read_batched: only empty subdirectories under {root!r} "
-                "(pass schema= for an empty read)"
-            )
-        def rd(p: str) -> DataFrame:
-            r = spark.read
-            if schema is not None:
-                r = r.schema(schema)
-            return r.parquet(p)
-
-        parts = [rd(p) for p in nonempty]
-        # allowMissingColumns: dirs from before an additive schema
-        # change lack the newer columns — fill null instead of failing
-        # the union (with schema= given, every per-root read already
-        # projects the full schema and this is a no-op)
-        out = reduce(
-            lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
-        )
-        return _pack_union(
-            spark, out, nonempty,
-            total_bytes=sum(sizes[p] for p in nonempty),
         )
     r = spark.read.option("recursiveFileLookup", "true")
     if schema is not None:
@@ -3686,16 +3582,25 @@ def dir_spec(path: str) -> int | None:
     """The spec a dir was stamped with, or None (unstamped — scan it
     unpruned)."""
     try:
-        names = os.listdir(path)
+        return _stamps(os.listdir(path))[0]
     except OSError:
         return None
+
+
+def _stamps(names: Iterable[str]) -> tuple[int | None, str | None]:
+    """The (spec, layout) stamps among a dir's top-level names — the
+    one parse of the ``_spec_<n>`` / ``_layout_<id>`` markers."""
+    spec: int | None = None
+    layout: str | None = None
     for name in names:
-        if name.startswith(_SPEC_PREFIX):
+        if spec is None and name.startswith(_SPEC_PREFIX):
             try:
-                return int(name[len(_SPEC_PREFIX):])
+                spec = int(name[len(_SPEC_PREFIX):])
             except ValueError:
-                continue
-    return None
+                pass
+        elif layout is None and name.startswith(_LAYOUT_PREFIX):
+            layout = name[len(_LAYOUT_PREFIX):]
+    return spec, layout
 
 
 def current_spec(root: str, default_n: int) -> int:
@@ -3753,73 +3658,48 @@ def read_batched_pruned(
     value list is TRANSLATED to each dir's own spec (spec_values), so
     pruning stays exact across an online re-bucketing —
     the Iceberg-partition-evolution read shape adapted to the manifest
-    protocol.  Per-dir spec resolution: the live base generation's
-    spec is the manifest's ``spec_n`` (committed atomically with the
-    base's rows — never stale relative to them); batch dirs carry
-    their writer's stamp (stamp_spec); an UNSTAMPED dir (crash between
-    write and stamp, or a legacy table) is scanned unpruned — the safe
-    direction, one trigger's data.  Empty ``values`` short-circuits to
+    protocol.  Per-dir spec resolution (_entries): an external seed
+    base takes the manifest's ``spec_n`` claim (committed atomically
+    with the reference); every root-local dir its own stamp
+    (stamp_spec); an UNSTAMPED dir (crash between write and stamp, a
+    mixed-spec verbatim fold, or a legacy table) is scanned unpruned —
+    the safe direction.  Empty ``values`` short-circuits to
     an empty DataFrame (nothing to probe).  The static per-scan IN
     lists push into every scan's PartitionFilters exactly as the
     fixed-spec read did (plan-pinned in tests/test_plans.py).
     ``max_batch`` restricts to txn-committed batch dirs (r10, see
     read_batched)."""
-    from functools import reduce
-
     if not values:
         return spark.createDataFrame([], schema)
-    man = _read_manifest(root) if os.path.isdir(root) else None
-    live_base = man["base"] if man else "base"
-    seed_spec: int | None = None
-    if man and isinstance(man.get("extra"), dict):
-        try:
-            seed_spec = int(man["extra"]["spec_n"])
-        except (KeyError, TypeError, ValueError):
-            seed_spec = None
-    paths = (
-        _live_dirs(root, exclude_batch, max_batch)
-        if os.path.isdir(root)
-        else []
+    return _union(
+        spark,
+        _spec_leg(spark, col, values, values_spec_n, schema),
+        _live_entries(root, exclude_batch, max_batch),
+        schema,
     )
-    parts: list[DataFrame] = []
-    pruned_paths: list[str] = []
-    pruned_bytes = 0
-    for p in paths:
-        nbytes = _dir_parquet_bytes(p)
-        if nbytes == 0:
-            continue
-        pruned_bytes += nbytes
-        # per-dir spec: every root-local dir (batch OR compacted base)
-        # answers for its own rows via its stamp — a compaction that
-        # consolidated MIXED-spec inputs verbatim leaves its base
-        # UNSTAMPED, and claiming the manifest's writer-facing spec_n
-        # for it would drop rows written under older specs (a pruning
-        # false negative the r8 spec model check caught on its first
-        # run).  Only the EXTERNAL seed snapshot (absolute path,
-        # immutable, unstampable — referenced read-only) takes its
-        # spec from the manifest: seed_batched committed that claim
-        # atomically with the reference and nothing ever rewrites it.
-        if os.path.isabs(live_base) and p == live_base:
-            m = seed_spec
-        else:
-            m = dir_spec(p)
-        df = spark.read.schema(schema).parquet(p)
-        if m is not None:
-            vals = spec_values(values, values_spec_n, m)
-            if vals is not None:
-                df = df.where(
-                    F.col(col).isin(vals) if vals else F.lit(False)
-                )
-        parts.append(df)
-        pruned_paths.append(p)
-    if not parts:
-        return spark.createDataFrame([], schema)
-    # task packing (see _pack_union); per-leg IN pruning is below the
-    # coalesce and untouched
-    return _pack_union(
-        spark, reduce(lambda a, b: a.unionByName(b), parts), pruned_paths,
-        total_bytes=pruned_bytes,
-    )
+
+
+def _spec_leg(
+    spark: SparkSession,
+    col: str,
+    values: Sequence[int],
+    values_spec_n: int,
+    schema: str,
+) -> Callable[[_DirEntry], DataFrame]:
+    """The spec-translating leg of the live and historical pruned
+    reads: a static ``col IN (...)`` over each dir, with the probe's
+    values TRANSLATED to the dir's own spec (spec_values) so the list
+    pushes into its scan's PartitionFilters; an unstamped dir (or an
+    incompatible spec) scans unpruned — the safe direction."""
+
+    def leg(e: _DirEntry) -> DataFrame:
+        df = _read_dir(spark, e, schema, partitioned=True)
+        vals = None if e.spec is None else spec_values(values, values_spec_n, e.spec)
+        if vals is None:
+            return df
+        return df.where(F.col(col).isin(vals) if vals else F.lit(False))
+
+    return leg
 
 
 #: per-dir LAYOUT marker (r9) — the equality-only sibling of the
@@ -3852,13 +3732,9 @@ def dir_layout(path: str) -> str | None:
     """The layout id a dir was stamped with, or None (unstamped —
     scan it unpruned)."""
     try:
-        names = os.listdir(path)
+        return _stamps(os.listdir(path))[1]
     except OSError:
         return None
-    for name in names:
-        if name.startswith(_LAYOUT_PREFIX):
-            return name[len(_LAYOUT_PREFIX):]
-    return None
 
 
 def read_batched_layout_split(
@@ -3889,60 +3765,22 @@ def read_batched_layout_split(
     ``max_batch`` restricts to txn-committed batch dirs (r10/r11 — a
     cross-family group's serve reads AT the group watermark, so an
     uncommitted trigger's index rows stay invisible)."""
-    from functools import reduce
-
-    man = _read_manifest(root) if os.path.isdir(root) else None
-    live_base = man["base"] if man else "base"
-    seed_layout: str | None = None
-    if man and isinstance(man.get("extra"), dict):
-        v = man["extra"].get("layout_id")
-        seed_layout = str(v) if v is not None else None
-    paths = (
-        _live_dirs(root, exclude_batch, max_batch)
-        if os.path.isdir(root)
-        else []
-    )
-    matched: list[DataFrame] = []
-    foreign: list[DataFrame] = []
-    matched_paths: list[str] = []
-    foreign_paths: list[str] = []
-    matched_bytes = foreign_bytes = 0
+    entries = _live_entries(root, exclude_batch, max_batch)
     vals = sorted(set(values))
-    for p in paths:
-        nbytes = _dir_parquet_bytes(p)
-        if nbytes == 0:
-            continue
-        if os.path.isabs(live_base) and p == live_base:
-            lid = seed_layout
-        else:
-            lid = dir_layout(p)
-        df = spark.read.schema(schema).parquet(p)
-        if lid is not None and lid == str(layout_id):
-            matched.append(df.where(F.col(col).isin(vals)))
-            matched_paths.append(p)
-            matched_bytes += nbytes
-        else:
-            foreign.append(df)
-            foreign_paths.append(p)
-            foreign_bytes += nbytes
-
-    def _union(
-        parts: list[DataFrame], pack_paths: list[str], nbytes: int
-    ) -> DataFrame:
-        if not parts:
-            return spark.createDataFrame([], schema)
-        # task packing (see _pack_union); the matched legs' isin
-        # pruning lives inside each leg, below the coalesce
-        return _pack_union(
-            spark, reduce(lambda a, b: a.unionByName(b), parts), pack_paths,
-            total_bytes=nbytes,
-        )
-
-    if not vals:
-        matched = []
+    lid = str(layout_id)
     return (
-        _union(matched, matched_paths, matched_bytes),
-        _union(foreign, foreign_paths, foreign_bytes),
+        _union(
+            spark,
+            lambda e: _read_dir(spark, e, schema, True).where(F.col(col).isin(vals)),
+            [e for e in entries if e.layout == lid] if vals else [],
+            schema,
+        ),
+        _union(
+            spark,
+            lambda e: _read_dir(spark, e, schema, True),
+            [e for e in entries if e.layout != lid],
+            schema,
+        ),
     )
 
 
@@ -4141,8 +3979,7 @@ def compact_batched(
     pass ``txn_watermark(group_root)`` here."""
     if not os.path.isdir(root):
         return 0
-    lease = _acquire_lease(root, lease_ttl_sec)
-    try:
+    with _hold_lease(root, lease_ttl_sec) as lease:
         return _compact_batched_locked(
             spark,
             root,
@@ -4159,8 +3996,6 @@ def compact_batched(
             keep_last_txns,
             change_feed,
         )
-    finally:
-        _release_lease(root, lease)
 
 
 def _compact_batched_locked(
@@ -4179,8 +4014,6 @@ def _compact_batched_locked(
     keep_last_txns: "tuple[str, int] | None" = None,
     change_feed: bool = False,
 ) -> int:
-    import time
-
     man = _read_manifest(root)
     now = time.time()
     # travel-depth guarantee (r9): bases of the last N generations are
@@ -4256,6 +4089,9 @@ def _compact_batched_locked(
     subs = [p for p in subs if _complete(p)]
     if len(subs) < min_dirs:
         return 0
+    # ONE walk per input dir serves the emptiness check, the fold's
+    # sizing, the spec/layout inheritance and the binpack file list
+    entries = _entries(subs, man)
     # data-less table (empty partitioned batches write only _SUCCESS):
     # nothing to rewrite — without this guard the partition_cols path
     # reduces over an empty union and the binpack path renames a
@@ -4264,12 +4100,7 @@ def _compact_batched_locked(
     # the snapshot consumed is the fold) — otherwise a data-less table
     # under tombstone pressure re-triggers a no-op compaction on every
     # maintenance pass and the side table never resets (ADVICE r7).
-    if not any(
-        n.endswith(".parquet")
-        for p in subs
-        for _, _, names in os.walk(p)
-        for n in names
-    ):
+    if not entries:
         if tombstone_col is not None:
             pending = _live_tomb_files(root)
             if pending:
@@ -4326,54 +4157,21 @@ def _compact_batched_locked(
         return df.join(F.broadcast(tomb), tombstone_col, "left_anti")
 
     if partition_cols:
-        # per-root loads + union: multi-root hive discovery in one
-        # relation is not supported (same constraint as read_batched)
-        from functools import reduce
-
-        def _rd_sub(p: str) -> DataFrame:
-            # LAYOUT-MIXED history (r10, found by the group change-feed
-            # test): a previous BINPACK fold nests its group files in
-            # g<N> subdirs, which plain hive-discovery reads cannot
-            # see — a later partition_cols compaction over such a base
-            # failed with UNABLE_TO_INFER_SCHEMA.  Per-dir detection:
-            # hive-style (col=value children) dirs keep the plain read
-            # (partition columns must resolve); anything else reads
-            # recursively.
-            hive = any(
-                "=" in n and os.path.isdir(os.path.join(p, n))
-                for n in os.listdir(p)
-            )
-            r = spark.read
-            if not hive:
-                r = r.option("recursiveFileLookup", "true")
-            return r.parquet(p)
-
-        fold_sizes = {p: _dir_parquet_bytes(p) for p in subs}
-        fold_dirs = [p for p in subs if fold_sizes[p] > 0]
-        parts = [_rd_sub(p) for p in fold_dirs]
-        # ADDITIVE SCHEMA EVOLUTION (r8): a long-lived state table
-        # gains columns over its life (a quality score on the dedup
-        # index, a norm column on the ANN index) — batches written
-        # before the addition lack them.  allowMissingColumns fills
-        # the old generations' rows with null for the new columns
-        # (Delta mergeSchema semantics), so the consolidated base
-        # carries the UNION schema and later explicit-schema reads
-        # stop depending on which generation a row came from.
-        # Additive only: a renamed/retyped column is a different
-        # column and needs a transform= rewrite, not a union.
-        # task packing (see _pack_union): the fold input union is the
-        # table's full sliver history, and a transform= (k-means
-        # retrain) evaluates it several times
+        # per-dir legs (_read_dir): a previous BINPACK fold nests its
+        # group files in g<N> subdirs that a hive-discovery read cannot
+        # see (r10 group change-feed test: UNABLE_TO_INFER_SCHEMA), so
+        # only hive dirs keep the plain read.  ADDITIVE SCHEMA
+        # EVOLUTION (r8): a long-lived state table gains columns over
+        # its life (a quality score on the dedup index, a norm column
+        # on the ANN index); the union's allowMissingColumns null-fills
+        # them for older dirs (Delta mergeSchema semantics), so the
+        # consolidated base carries the UNION schema.  Additive only: a
+        # renamed/retyped column needs a transform= rewrite.  The
+        # union is packed (_pack_union): it is the table's full sliver
+        # history, and a transform= (k-means retrain) evaluates it
+        # several times.
         df = _fold(
-            _pack_union(
-                spark,
-                reduce(
-                    lambda a, b: a.unionByName(b, allowMissingColumns=True),
-                    parts,
-                ),
-                fold_dirs,
-                total_bytes=sum(fold_sizes[p] for p in fold_dirs),
-            )
+            _union(spark, lambda e: _read_dir(spark, e, None, True), entries)
         )
         transform_extra: dict | None = None
         if transform is not None:
@@ -4413,18 +4211,7 @@ def _compact_batched_locked(
             except (TypeError, ValueError):
                 out_spec = None
         else:
-            in_specs: set[int | None] = set()
-            for p in subs:
-                if os.path.isabs(live_base) and p == live_base:
-                    s = None
-                    if man and isinstance(man.get("extra"), dict):
-                        try:
-                            s = int(man["extra"]["spec_n"])
-                        except (KeyError, TypeError, ValueError):
-                            s = None
-                    in_specs.add(s)
-                else:
-                    in_specs.add(dir_spec(p))
+            in_specs = {e.spec for e in entries}
             if len(in_specs) == 1:
                 out_spec = in_specs.pop()
         if out_spec is not None:
@@ -4441,16 +4228,7 @@ def _compact_batched_locked(
         if transform_extra is not None and "layout_id" in transform_extra:
             out_layout = str(transform_extra["layout_id"])
         else:
-            in_layouts: set[str | None] = set()
-            for p in subs:
-                if os.path.isabs(live_base) and p == live_base:
-                    s = None
-                    if man and isinstance(man.get("extra"), dict):
-                        v = man["extra"].get("layout_id")
-                        s = str(v) if v is not None else None
-                    in_layouts.add(s)
-                else:
-                    in_layouts.add(dir_layout(p))
+            in_layouts = {e.layout for e in entries}
             if len(in_layouts) == 1:
                 out_layout = in_layouts.pop()
         if out_layout is not None:
@@ -4459,23 +4237,15 @@ def _compact_batched_locked(
             )
             with open(os.path.join(tmp, f"{_LAYOUT_PREFIX}{safe}"), "w"):
                 pass
-        n_groups = sum(
-            1 for _, _, names in os.walk(tmp) if any(n.endswith(".parquet") for n in names)
+        n_groups = len(
+            {os.path.dirname(fp) for e in _entries([tmp]) for fp, _ in e.files}
         )
     else:
         # the file listing the binpack plans over (path-ordered, like
         # the batch planner's file_id order)
-        files: list[tuple[str, int]] = []
-        for p in subs:
-            for dirpath, _, names in os.walk(p):
-                for n in sorted(names):
-                    if n.endswith(".parquet"):
-                        fp = os.path.join(dirpath, n)
-                        files.append((fp, os.path.getsize(fp)))
-        files.sort()
         groups: dict[int, list[str]] = {}
         cum_before = 0
-        for fp, sz in files:
+        for fp, sz in sorted(f for e in entries for f in e.files):
             groups.setdefault(cum_before // target_bytes, []).append(fp)
             cum_before += sz
         for g, paths in groups.items():
@@ -4495,10 +4265,7 @@ def _compact_batched_locked(
         # an external seed base (seed_batched) is consumed under its
         # ABSOLUTE path — its basename could collide with root-local
         # names, and the GC paths key "never delete" off isabs
-        if os.path.isabs(live_base) and p == live_base:
-            consumed.setdefault(p, now)
-        else:
-            consumed.setdefault(os.path.basename(p), now)
+        consumed.setdefault(p if p == live_base else os.path.basename(p), now)
     # CAS-on-gen (narrows the expired-lease takeover window): if
     # another compactor committed while we built — only possible after
     # our lease was reclaimed as stale — our build is based on a dead
@@ -4595,37 +4362,20 @@ def _write_change_file(
     dropped is absent from the diff (payload comparison happens on the
     output schema).  Returns the change name for the manifest, or None
     when the previous base is gone (consumers then fall back)."""
-    r = spark.read
-    newb = r.parquet(new_base)  # hive-partitioned (partition_cols path)
-    prev: DataFrame | None = None
-    if man is not None:
-        base = man["base"]
-        p = base if os.path.isabs(base) else os.path.join(root, base)
-        if os.path.isdir(p) and any(
-            n.endswith(".parquet") for _, _, ns in os.walk(p) for n in ns
-        ):
-            hive = any(
-                "=" in n and os.path.isdir(os.path.join(p, n))
-                for n in os.listdir(p)
-            )
-            rr = spark.read
-            if not hive:
-                rr = rr.option("recursiveFileLookup", "true")
-            prev = rr.parquet(p)
-    cols = list(newb.schema.fields)
-    if prev is None:
-        prev_al = spark.createDataFrame([], newb.schema)
-    else:
-        prev_al = prev.select(
-            *[
-                (
-                    F.col(f.name).cast(f.dataType)
-                    if f.name in prev.columns
-                    else F.lit(None).cast(f.dataType)
-                ).alias(f.name)
-                for f in cols
-            ]
+    newb = spark.read.parquet(new_base)  # hive (partition_cols path)
+    base = man["base"] if man is not None else None
+    prev = _entries(
+        [base if os.path.isabs(base) else os.path.join(root, base)] if base else [],
+        man,
+    )
+    prev_al = (
+        _align_to(
+            _union(spark, lambda e: _read_dir(spark, e, None, True), prev),
+            newb.schema.fields,
         )
+        if prev
+        else spark.createDataFrame([], newb.schema)
+    )
     dels = prev_al.exceptAll(newb).withColumn("_change", F.lit("delete"))
     ins = newb.exceptAll(prev_al).withColumn("_change", F.lit("insert"))
     cdir = os.path.join(root, _CHANGES, f"g{gen}")

@@ -5345,7 +5345,7 @@ def test_group_feed_vacuum_guard_later_generation(spark, tmpdir):
     returned a silently LOSSY feed (missing every window insert).  The
     guard now diffs against the LIVE manifest's consumed set and
     returns None, pushing the caller to the snapshot path, whose own
-    vacuum discipline (_group_paths_at) raises NAMED."""
+    vacuum discipline (_group_entries_at) raises NAMED."""
     from mo_etl_spark import streaming as S
 
     g = f"{tmpdir}/gv"
@@ -7506,3 +7506,111 @@ def test_multi_writer_reserved_commits_threaded_model(spark, tmpdir, seed):
     want = {k for t in confirmed for k in range(t * PER, (t + 1) * PER)}
     assert got == want
     assert confirmed == set(S.txn_log(g))
+
+
+def test_binpack_base_survives_partitioned_reads(spark, tmpdir):
+    """A BINPACK fold nests its output in ``base<gen>/g<i>/`` — no hive
+    ``col=value`` children — so the partitioned readers must still look
+    it up recursively: hive discovery alone lists nothing there and
+    silently dropped every folded row (350 live rows read back as 50,
+    and the folded generation's 300 as 0)."""
+    from mo_etl_spark import streaming as S
+
+    root = f"{tmpdir}/t"
+    schema = "v BIGINT"
+
+    def batch(lo, hi, bid):
+        S.idempotent_batch_write(
+            spark.range(lo, hi).select(F.col("id").alias("v")), root, bid
+        )
+
+    for b in range(3):
+        batch(b * 100, (b + 1) * 100, b)
+    assert S.compact_batched(spark, root, min_dirs=0, gc_grace_sec=0) == 1
+    assert os.path.isdir(f"{root}/base1/g0")
+    batch(300, 350, 3)
+    assert S.read_batched(spark, root, partitioned=True, schema=schema).count() == 350
+    assert S.read_batched(spark, root, schema=schema).count() == 350
+    assert S.read_batched_at(spark, root, 1, partitioned=True).count() == 300
+    assert (
+        S.read_batched_at(spark, root, 1, schema=schema, partitioned=True).count()
+        == 300
+    )
+
+
+def test_zero_byte_parquet_dir_changes_no_result(spark, tmpdir):
+    """One emptiness rule: a committed batch dir holding only a
+    zero-byte ``part-0.parquet`` (a torn write) carries no rows, so
+    every resolving reader returns exactly what the same table without
+    that dir returns — including the schema-less group read, which
+    used to fail on the file's missing footer."""
+    from mo_etl_spark import streaming as S
+
+    schema = "k BIGINT, v BIGINT, ib BIGINT"
+    n = 4
+
+    def build(name, torn):
+        root, group = f"{tmpdir}/{name}", f"{tmpdir}/{name}_g"
+        df = spark.range(100).select(
+            F.col("id").alias("k"),
+            (F.col("id") * 10).alias("v"),
+            F.pmod(F.col("id"), F.lit(n)).alias("ib"),
+        )
+        S.idempotent_batch_write(df, root, 0, partition_cols=["ib"])
+        S.stamp_spec(root, 0, n)
+        if torn:
+            os.makedirs(f"{root}/b1")
+            for f in ("part-0.parquet", "_SUCCESS"):
+                open(f"{root}/b1/{f}", "w").close()
+        S.txn_commit(group, 1, {"t": root})
+        return root, group
+
+    def reads(root, group):
+        def rows(df):
+            return sorted(tuple(r) for r in df.select("k", "v").collect())
+
+        return [
+            rows(S.read_batched(spark, root, schema=schema)),
+            rows(S.read_batched(spark, root, partitioned=True, schema=schema)),
+            rows(S.read_batched_pruned(spark, root, "ib", [1, 3], n, schema)),
+            rows(S.read_group_at(spark, group, 1, "t", schema, partitioned=True)),
+            rows(S.read_group_at(spark, group, 1, "t")),
+        ]
+
+    want = reads(*build("clean", torn=False))
+    got = reads(*build("torn", torn=True))
+    assert want[0] and len(want[2]) == 50
+    assert got == want
+
+
+def test_group_lease_contention_fails_named_within_wait(tmpdir, monkeypatch):
+    """Every group-pointer writer waits on the shared ``_LEASE_WAIT_SEC``
+    bound and then fails with the NAMED CompactorBusy, naming the
+    holder's pid and host and how long it waited — never a silent hang
+    or a bare retry loop of its own."""
+    import re
+    import time
+
+    from mo_etl_spark import streaming as S
+
+    group, root = f"{tmpdir}/g", f"{tmpdir}/t"
+    os.makedirs(group)
+    monkeypatch.setattr(S, "_LEASE_WAIT_SEC", 0.2)
+    token = S._acquire_lease(group, 60)
+    try:
+        for call in (
+            lambda: S.txn_reserve(group, {"t": root}),
+            lambda: S.publish_branch(group, "audit"),
+            lambda: S.txn_commit(group, 0, {"t": root}),
+        ):
+            t0 = time.monotonic()
+            with pytest.raises(S.CompactorBusy) as err:
+                call()
+            assert time.monotonic() - t0 < 1.0
+            msg = str(err.value)
+            assert f"held by pid {os.getpid()}" in msg, msg
+            assert S._HOSTNAME in msg, msg
+            assert re.search(r"waiting \d+\.\d+ s of 0\.2 s", msg), msg
+    finally:
+        S._release_lease(group, token)
+    assert S.txn_commit(group, 0, {"t": root}) == 0  # released: proceeds
