@@ -22,6 +22,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     import __spark_entry__ as entrymod
     from mo_etl_spark.session import get_spark
+    from mo_etl_spark.tables import cache_path
 
     spark = get_spark(app_name="bench")
     qs = entrymod.queries()
@@ -55,13 +56,13 @@ def main() -> None:
 
     # COLD-CACHE VISIBILITY (VERDICT r11 item #9): some serving queries
     # reuse persisted, mtime-invalidated fixture caches (the feed
-    # parquet drops, the _ivf_vec_index builds under .cache/<sf>/).
+    # parquet drops, the _ivf_vec_index builds under the sf's
+    # cache_path dir).
     # Record which top-level cache entries each query CREATED OR
     # REWROTE this run, so the warm-cache assumption is machine-visible
     # in BENCH_DETAIL instead of a BASELINE.md footnote.  Driver-only
-    # scandir of the small .cache/<sf> dir — never a Spark job.
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    cache_dir = os.path.join("/root/repo/.cache", sf_tag)
+    # scandir of the small per-sf cache dir — never a Spark job.
+    cache_dir = cache_path(sf_dir, "")
 
     def _cache_state() -> dict[str, float]:
         try:

@@ -53,17 +53,13 @@ def index_is_stale(path: str, src: str, expect: dict) -> bool:
     import os
 
     from mo_etl_spark import streaming as ST
+    from mo_etl_spark.tables import is_stale
 
     try:
         man = ST._read_manifest(path)
     except ValueError:
         return True  # corrupt manifest: rebuild rather than serve blind
-    if man is None:
-        return True
-    success = os.path.join(path, man["base"], "_SUCCESS")
-    if not os.path.exists(success) or os.path.getmtime(success) < os.path.getmtime(
-        src
-    ):
+    if man is None or is_stale(os.path.join(path, man["base"], "_SUCCESS"), src):
         return True
     extra = man.get("extra") if isinstance(man.get("extra"), dict) else {}
     return any(extra.get(k) != v for k, v in expect.items())

@@ -27,6 +27,12 @@ from pyspark.sql import SparkSession
 #: need it on their path to import the daemon module and the engine's UDFs
 ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+#: the one root of every derived on-disk artifact: fixture caches (per
+#: scale factor, ``tables.cache_path``), stream scratch dirs, the
+#: managed-table warehouse and the embedded metastore.  Taken from the
+#: checkout, so an exported tree or a worktree keeps its own caches.
+CACHE_ROOT = os.path.join(ENGINE_ROOT, ".cache")
+
 #: runtime-settable confs applied to ANY session our queries run under
 RUNTIME_CONFS = {
     # jx null math: 1/0 -> Null, bad casts -> Null (mo_math semantics (u))
@@ -58,6 +64,15 @@ def prepare(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _heap_sizes(phys_bytes: int) -> tuple[int, int]:
+    """Default driver heap and initial heap, in GB, for a host with
+    ``phys_bytes`` of physical memory: half of it, capped at 24 GB (a
+    24 GB default on a 16 GB host let a long session's JVM grow until
+    the kernel OOM-killed it), and an initial heap of a third of that."""
+    heap = max(1, min(24, (phys_bytes // 2) >> 30))
+    return heap, max(1, heap // 3)
+
+
 def get_spark(
     app_name: str = "mo-etl-spark",
     master: str | None = None,
@@ -78,6 +93,7 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = 32 if cpus == "*" else max(int(cpus), 4)
 
+    heap, xms = _heap_sizes(os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -85,16 +101,16 @@ def get_spark(
         # single-JVM local mode: driver heap IS the executor heap; a
         # small heap turns long multi-query sessions into GC storms
         # (measured: 74-query bench 105-157s at 8g vs ~90s at 24g)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{heap}g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # managed tables (bucketed-join tests) live under .cache, and the
-        # embedded-metastore derby files go with them — keeps the repo
-        # root clean of spark-warehouse/ and metastore_db/
-        .config("spark.sql.warehouse.dir", "/root/repo/.cache/warehouse")
+        # managed tables (bucketed-join tests) live under the cache
+        # root, and the embedded-metastore derby files go with them —
+        # keeps the repo root clean of spark-warehouse/ and metastore_db/
+        .config("spark.sql.warehouse.dir", os.path.join(CACHE_ROOT, "warehouse"))
         .config(
             "spark.driver.extraJavaOptions",
-            "-Dderby.system.home=/root/repo/.cache/derby "
+            f"-Dderby.system.home={os.path.join(CACHE_ROOT, 'derby')} "
             # batch-throughput GC: long multi-query sessions accumulate
             # codegen classes + broadcast refs; ParallelGC trades pause
             # latency (irrelevant here) for throughput, and a generous
@@ -102,7 +118,7 @@ def get_spark(
             # codegen'd plans (measured: random 5-40s stalls under G1)
             + os.environ.get(
                 "SPARK_GRAFT_GC_OPTS",
-                "-XX:+UseParallelGC -XX:MaxMetaspaceSize=2g -Xms8g",
+                f"-XX:+UseParallelGC -XX:MaxMetaspaceSize=2g -Xms{xms}g",
             ),
         )
         .config("spark.python.daemon.module", "mo_etl_spark.pyworker")

@@ -2879,23 +2879,24 @@ def read_branch_head(
     return _union(
         spark,
         lambda e: _read_dir(spark, e, schema, partitioned),
-        _live_entries(root, None, head) + _staged_dirs(root, branch, head),
+        _live_entries(root, None, head) + _entries(_staged_dirs(root, branch, head)),
         schema,
     )
 
 
-def _staged_dirs(root: str, branch: str, max_id: int) -> list[_DirEntry]:
-    """This branch's non-empty staged batch dirs
-    (``b<id>.stage.<branch>``) with id <= max_id."""
+def _staged_dirs(root: str, branch: str, max_id: int) -> list[str]:
+    """Paths of this branch's staged batch dirs (``b<id>.stage.<branch>``)
+    with id <= max_id — empty ones included, so publishing renames and
+    dropping removes every one of them."""
     suffix = f".stage.{branch}"
-    return _entries(
+    return [
         os.path.join(root, d)
         for d in (sorted(os.listdir(root)) if os.path.isdir(root) else [])
         if d.startswith("b")
         and d.endswith(suffix)
         and d[1:-len(suffix)].isdigit()
         and int(d[1:-len(suffix)]) <= max_id
-    )
+    ]
 
 
 def publish_branch(group_root: str, branch: str) -> int:
@@ -2944,8 +2945,8 @@ def publish_branch(group_root: str, branch: str) -> int:
         for alias, member in rec["tables"].items():
             root = member["root"]
             suffix = f".stage.{branch}"
-            for e in _staged_dirs(root, branch, head):
-                p, dst = e.path, e.path[: -len(suffix)]
+            for p in _staged_dirs(root, branch, head):
+                dst = p[: -len(suffix)]
                 if os.path.exists(os.path.join(dst, "_SUCCESS")):
                     shutil.rmtree(p, ignore_errors=True)  # replay
                     continue
@@ -3220,8 +3221,8 @@ def drop_branch(group_root: str, branch: str) -> None:
         logged = set(txn_log(group_root))
         for member in rec["tables"].values():
             root = member["root"]
-            for e in _staged_dirs(root, branch, 1 << 62):
-                shutil.rmtree(e.path, ignore_errors=True)
+            for p in _staged_dirs(root, branch, 1 << 62):
+                shutil.rmtree(p, ignore_errors=True)
             # a publish that crashed AFTER renaming staged dirs into
             # their b<id> names left them as uncommitted main-path
             # dirs; dropping the branch without removing them would

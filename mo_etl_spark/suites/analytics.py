@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from mo_etl_spark.functions.numeric import cents
 from mo_etl_spark.registry import query
 from mo_etl_spark.session import prepare
-from mo_etl_spark.tables import load_table
+from mo_etl_spark.tables import cache_path, load_table, table_tag
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -883,9 +883,9 @@ def graph_pagerank_supply(spark: SparkSession, sf_dir: str) -> DataFrame:
         # caches) instead of re-paying the bucketed write every run —
         # and never DROP a table a concurrent session may be reading
         # unless the snapshot actually changed.
-        tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_").replace("-", "_")
+        tag = table_tag(sf_dir)
         src_mtime = _src_mtime(src_path)
-        marker = f"/root/repo/.scratch/pr_edges_supply_{tag}.srcmtime"
+        marker = cache_path(sf_dir, f"pr_edges_supply_{tag}.srcmtime")
         fresh = _marker_fresh(marker, src_mtime)
         ranks = pagerank_bucketed(
             edges,
@@ -937,7 +937,7 @@ def graph_pagerank_cobucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     edges = e0.unionAll(e0.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_").replace("-", "_")
+    tag = table_tag(sf_dir)
     src_path = os.path.join(sf_dir, "lineitem.parquet")
     src_mtime = _src_mtime(src_path)
     # DATA-PROPORTIONAL bucket count (r11 optimization; guide §2.2
@@ -950,7 +950,7 @@ def graph_pagerank_cobucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parallel enough; the edge table is a distinct projection of
     # lineitem, so lineitem's size bounds it.
     n_buckets = max(8, -(-_file_bytes(src_path) // (128 << 20)))
-    marker = f"/root/repo/.scratch/pr_edges_cob_{tag}_b{n_buckets}.srcmtime"
+    marker = cache_path(sf_dir, f"pr_edges_cob_{tag}_b{n_buckets}.srcmtime")
     fresh = _marker_fresh(marker, src_mtime)
     if not fresh:
         # the source size crossed a 128 MB boundary (or the snapshot
@@ -958,8 +958,7 @@ def graph_pagerank_cobucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         # stale — drop their tables, warehouse dirs, and markers so
         # they don't accumulate across data-size changes (ADVICE r11)
         _drop_bucket_variants(
-            spark, f"pr_edges_cob_{tag}_b", n_buckets,
-            "/root/repo/.scratch",
+            spark, f"pr_edges_cob_{tag}_b", n_buckets, os.path.dirname(marker)
         )
     ranks = pagerank_cobucketed(
         edges,

@@ -20,7 +20,7 @@ from mo_etl_spark.operators import text as X
 from mo_etl_spark.operators.multimodal import decode_batch, with_binary_payload
 from mo_etl_spark.registry import query
 from mo_etl_spark.session import prepare
-from mo_etl_spark.tables import load_table
+from mo_etl_spark.tables import cache_path, derived, load_table
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -511,31 +511,72 @@ def llm_dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame
     The oracle replays signatures, banding, the new-vs-all join, and
     the verification end to end — the incremental pipeline itself is
     hash-checked."""
-    import os
-
     docs = _docs(spark, sf_dir)
     base = docs.where(F.col("doc_id") < 400).select("doc_id", "text")
     new_batch = _incr_new_batch(docs)
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     # sketch params are PART of the cache key (ADVICE r2), DERIVED
     # from the one set of variables passed to the index builder and
     # the probe (ADVICE r3 #2): editing k/bands/base here cannot
     # leave a stale-keyed index that silently drops candidates
     k, bands, base_lt = 16, 8, 400
-    idx_path = os.path.join(
-        "/root/repo/.cache", tag, f"minhash_band_index__k{k}_b{bands}_base{base_lt}"
+    idx_path = derived(
+        sf_dir,
+        f"minhash_band_index__k{k}_b{bands}_base{base_lt}",
+        "documents",
+        lambda p: D.minhash_md5_band_index(base, k=k, bands=bands)
+        .write.mode("overwrite")
+        .parquet(p),
     )
-    success = os.path.join(idx_path, "_SUCCESS")
-    src = os.path.join(sf_dir, "documents.parquet")
-    if not os.path.exists(success) or os.path.getmtime(success) < os.path.getmtime(src):
-        D.minhash_md5_band_index(base, k=k, bands=bands).write.mode(
-            "overwrite"
-        ).parquet(idx_path)
     index = spark.read.parquet(idx_path)
     corpus = base.unionByName(new_batch)
     return D.minhash_md5_incremental_pairs(
         index, new_batch, corpus, k=k, bands=bands, verify_threshold=0.8
     )
+
+
+#: bucket counts of the pruned incremental-dedup layout: corpus doc-id
+#: buckets (db) and band-index probe-key buckets (ib)
+_INCR_PRUNED_NB, _INCR_PRUNED_IB = 16, 32
+
+
+def _incr_pruned_tables(
+    sf_dir: str, base: DataFrame, new_batch: DataFrame
+) -> tuple[str, str]:
+    """The persisted pruned-layout tables shared by
+    llm_dedup_incremental_pruned and llm_dedup_incremental_retract: the
+    400-doc base's band index partitioned by its probe key ib, and the
+    bucket-partitioned corpus snapshot (the persisted table a daily
+    pipeline maintains) partitioned by db.  Cache keys carry the sketch
+    params and bucket counts, so a layout change can never probe a
+    stale table."""
+    k, bands, nb, n_ib = 16, 8, _INCR_PRUNED_NB, _INCR_PRUNED_IB
+
+    def write(df: DataFrame, pcol: str):
+        return lambda p: df.repartition(F.col(pcol)).write.mode(
+            "overwrite"
+        ).partitionBy(pcol).parquet(p)
+
+    idx_path = derived(
+        sf_dir,
+        f"minhash_band_index__k{k}_b{bands}_base400_ib{n_ib}",
+        "documents",
+        write(
+            D.minhash_md5_band_index(base, k=k, bands=bands).withColumn(
+                "ib", D.band_bucket("band", "bk", n_ib)
+            ),
+            "ib",
+        ),
+    )
+    corp_path = derived(
+        sf_dir,
+        f"incr_corpus_bucketed__nb{nb}_base400",
+        "documents",
+        write(
+            base.unionByName(new_batch).withColumn("db", F.pmod("doc_id", F.lit(nb))),
+            "db",
+        ),
+    )
+    return idx_path, corp_path
 
 
 @query(
@@ -562,49 +603,11 @@ def llm_dedup_incremental_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     either join) — what changes is the 100-TB cost shape: a daily
     batch pays |batch| + matched buckets of both tables, never a full
     scan of either."""
-    import os
-
     docs = _docs(spark, sf_dir)
     base = docs.where(F.col("doc_id") < 400).select("doc_id", "text")
     new_batch = _incr_new_batch(docs)
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    k, bands, base_lt, nb, n_ib = 16, 8, 400, 16, 32
-    idx_path = os.path.join(
-        "/root/repo/.cache",
-        tag,
-        f"minhash_band_index__k{k}_b{bands}_base{base_lt}_ib{n_ib}",
-    )
-    # bucket-partitioned corpus snapshot (the persisted table a daily
-    # pipeline maintains); cache keys carry the bucket counts so a
-    # layout change can never probe a stale table
-    corp_path = os.path.join(
-        "/root/repo/.cache", tag, f"incr_corpus_bucketed__nb{nb}_base{base_lt}"
-    )
-    src = os.path.join(sf_dir, "documents.parquet")
-    for path, build, pcol in (
-        (
-            idx_path,
-            lambda: D.minhash_md5_band_index(base, k=k, bands=bands).withColumn(
-                "ib", D.band_bucket("band", "bk", n_ib)
-            ),
-            "ib",
-        ),
-        (
-            corp_path,
-            lambda: base.unionByName(new_batch).withColumn(
-                "db", F.pmod("doc_id", F.lit(nb))
-            ),
-            "db",
-        ),
-    ):
-        success = os.path.join(path, "_SUCCESS")
-        if not os.path.exists(success) or os.path.getmtime(success) < os.path.getmtime(
-            src
-        ):
-            df = build()
-            df.repartition(F.col(pcol)).write.mode("overwrite").partitionBy(
-                pcol
-            ).parquet(path)
+    k, bands, nb, n_ib = 16, 8, _INCR_PRUNED_NB, _INCR_PRUNED_IB
+    idx_path, corp_path = _incr_pruned_tables(sf_dir, base, new_batch)
     # the batch's own band buckets: a bounded collect (≤ min(bands ×
     # |batch|, n_ib) values) — the banding plan is NOT checkpointed,
     # so its source filters keep the DPP build side selective (the
@@ -680,8 +683,6 @@ def llm_dedup_incremental_retract(spark: SparkSession, sf_dir: str) -> DataFrame
     pay a growing anti-join forever.  The oracle replays the pipeline
     over the retained corpus: a tombstoned doc contributes no bands,
     no candidates, no pairs — hash-checked, not assumed."""
-    import os
-
     docs = _docs(spark, sf_dir)
     base = docs.where(F.col("doc_id") < 400).select("doc_id", "text")
     new_batch = _incr_new_batch(docs)
@@ -689,44 +690,11 @@ def llm_dedup_incremental_retract(spark: SparkSession, sf_dir: str) -> DataFrame
         docs.where((F.col("doc_id") < 400) & (F.pmod("doc_id", F.lit(37)) == 0))
         .select("doc_id")
     )
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    k, bands, base_lt, nb, n_ib = 16, 8, 400, 16, 32
+    k, bands, nb, n_ib = 16, 8, _INCR_PRUNED_NB, _INCR_PRUNED_IB
     # SAME persisted pruned-layout tables as llm_dedup_incremental_
     # pruned — the point is that retraction needs no rebuild and no
     # layout downgrade
-    idx_path = os.path.join(
-        "/root/repo/.cache",
-        tag,
-        f"minhash_band_index__k{k}_b{bands}_base{base_lt}_ib{n_ib}",
-    )
-    corp_path = os.path.join(
-        "/root/repo/.cache", tag, f"incr_corpus_bucketed__nb{nb}_base{base_lt}"
-    )
-    src = os.path.join(sf_dir, "documents.parquet")
-    for path, build, pcol in (
-        (
-            idx_path,
-            lambda: D.minhash_md5_band_index(base, k=k, bands=bands).withColumn(
-                "ib", D.band_bucket("band", "bk", n_ib)
-            ),
-            "ib",
-        ),
-        (
-            corp_path,
-            lambda: base.unionByName(new_batch).withColumn(
-                "db", F.pmod("doc_id", F.lit(nb))
-            ),
-            "db",
-        ),
-    ):
-        success = os.path.join(path, "_SUCCESS")
-        if not os.path.exists(success) or os.path.getmtime(success) < os.path.getmtime(
-            src
-        ):
-            df = build()
-            df.repartition(F.col(pcol)).write.mode("overwrite").partitionBy(
-                pcol
-            ).parquet(path)
+    idx_path, corp_path = _incr_pruned_tables(sf_dir, base, new_batch)
     banded = D.minhash_md5_band_index(new_batch, k=k, bands=bands)
     ib_vals = sorted(
         r["ib"]
@@ -1367,10 +1335,7 @@ def _ivf_vec_index(spark: SparkSession, sf_dir: str, cents_lt: int = 16) -> str:
     cents_ = emb.where(F.col("vec_id") < cents_lt).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("vec")
     )
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    idx_path = os.path.join(
-        "/root/repo/.cache", tag, f"ivf_vec_index__cents_lt{cents_lt}"
-    )
+    idx_path = cache_path(sf_dir, f"ivf_vec_index__cents_lt{cents_lt}")
     src = os.path.join(sf_dir, "embeddings.parquet")
     # param-aware staleness (ADVICE r5): a changed _IVF_SUB_CAP or
     # centroid spec rebuilds instead of failing the load guard forever
@@ -1747,10 +1712,7 @@ def llm_sim_lsh_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("vec")
     )
     n_planes, seed, cap_rows = 4, 42, 256
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    idx_path = os.path.join(
-        "/root/repo/.cache", tag, f"lsh_vec_index__p{n_planes}_s{seed}"
-    )
+    idx_path = cache_path(sf_dir, f"lsh_vec_index__p{n_planes}_s{seed}")
     src = os.path.join(sf_dir, "embeddings.parquet")
     lsh_params = {
         "kind": "lsh_vec", "n_planes": n_planes, "seed": seed, "dim": 64,
@@ -2545,10 +2507,7 @@ def llm_sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents_ = emb.where(F.col("vec_id") < cents_lt).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("vec")
     )
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    idx_path = os.path.join(
-        "/root/repo/.cache", tag, f"ivfpq_code_index__cents_lt{cents_lt}_m8"
-    )
+    idx_path = cache_path(sf_dir, f"ivfpq_code_index__cents_lt{cents_lt}_m8")
     src = os.path.join(sf_dir, "embeddings.parquet")
     pq_params = {
         "kind": "ivfpq_codes", "cents": f"vec_id<{cents_lt}", "m": 8, "dsub": 8,
@@ -2694,10 +2653,7 @@ def llm_sim_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents_ = emb.where(F.col("vec_id") < cents_lt).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("vec")
     )
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    idx_path = os.path.join(
-        "/root/repo/.cache", tag, f"ivfpq_residual_index__cents_lt{cents_lt}_m8"
-    )
+    idx_path = cache_path(sf_dir, f"ivfpq_residual_index__cents_lt{cents_lt}_m8")
     src = os.path.join(sf_dir, "embeddings.parquet")
     res_params = {
         "kind": "ivfpq_codes", "cents": f"vec_id<{cents_lt}", "m": 8, "dsub": 8,
@@ -4568,20 +4524,11 @@ def _trained_pq_cents(spark: SparkSession, sf_dir: str, residual: bool) -> DataF
     (Jégou et al. 2011 §IV.C: residual-distribution codebooks are
     what make IVFADC beat flat IVF-PQ).  Cached per sf, params in the
     path; training is deterministic so the cache is pure."""
-    import os
-
     emb = _emb(spark, sf_dir)
     c = emb.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("vec"))
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     suffix = "res" if residual else "raw"
-    path = os.path.join(
-        "/root/repo/.cache", tag, f"pq_trained_cents__m8_d8_k256_it2_l2kpp_{suffix}"
-    )
-    success = os.path.join(path, "_SUCCESS")
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    if not os.path.exists(success) or os.path.getmtime(success) < os.path.getmtime(
-        src
-    ):
+
+    def build(path: str) -> None:
         if residual:
             cents_ = emb.where(F.col("vec_id") < 16).select(
                 F.col("vec_id").alias("cent_id"), F.col("embedding").alias("vec")
@@ -4594,7 +4541,12 @@ def _trained_pq_cents(spark: SparkSession, sf_dir: str, residual: bool) -> DataF
         S.pq_train_codebooks(
             train_input, m=8, dsub=8, k_codes=256, iters=2
         ).coalesce(1).write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+
+    return spark.read.parquet(
+        derived(
+            sf_dir, f"pq_trained_cents__m8_d8_k256_it2_l2kpp_{suffix}", "embeddings", build
+        )
+    )
 
 
 def _trained_ivfpq_topk(
@@ -4618,11 +4570,8 @@ def _trained_ivfpq_topk(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("vec")
     )
     pq_cents = _trained_pq_cents(spark, sf_dir, residual)
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     suffix = "res" if residual else "raw"
-    idx_path = os.path.join(
-        "/root/repo/.cache", tag, f"ivfpq_trained_index__m8_k256_{suffix}"
-    )
+    idx_path = cache_path(sf_dir, f"ivfpq_trained_index__m8_k256_{suffix}")
     src = os.path.join(sf_dir, "embeddings.parquet")
     params = {
         "kind": "ivfpq_codes_trained", "cents": "vec_id<16", "m": 8, "dsub": 8,
@@ -4734,10 +4683,7 @@ def llm_recall_lsh_at5(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("vec")
     )
     n_planes, seed, cap_rows = 4, 42, 24
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    idx_path = os.path.join(
-        "/root/repo/.cache", tag, f"lsh_recall_gate__p{n_planes}_s{seed}_c{cap_rows}"
-    )
+    idx_path = cache_path(sf_dir, f"lsh_recall_gate__p{n_planes}_s{seed}_c{cap_rows}")
     src = os.path.join(sf_dir, "embeddings.parquet")
     lsh_params = {
         "kind": "lsh_vec", "n_planes": n_planes, "seed": seed, "dim": 64,
@@ -4920,21 +4866,17 @@ def llm_dedup_incremental_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     table bucketed by hash, the daily probe is |batch chunks| +
     matched hashes, never |corpus| (the minhash-incremental cost shape
     at exact-substring granularity, with no banding machinery)."""
-    import os
-
     docs = _docs(spark, sf_dir)
     base = docs.where(F.col("doc_id") < 400).select("doc_id", "text")
     new_batch = _incr_new_batch(docs)
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    idx_path = os.path.join(
-        "/root/repo/.cache", tag, "cdc_chunk_index__b0_base400"
+    idx_path = derived(
+        sf_dir,
+        "cdc_chunk_index__b0_base400",
+        "documents",
+        lambda p: X.cdc_chunks(base).select("doc_id", "chunk_hash")
+        .write.mode("overwrite")
+        .parquet(p),
     )
-    success = os.path.join(idx_path, "_SUCCESS")
-    src = os.path.join(sf_dir, "documents.parquet")
-    if not os.path.exists(success) or os.path.getmtime(success) < os.path.getmtime(src):
-        X.cdc_chunks(base).select("doc_id", "chunk_hash").write.mode(
-            "overwrite"
-        ).parquet(idx_path)
     index = spark.read.parquet(idx_path)
     new_chunks = X.cdc_chunks(new_batch).select("doc_id", "chunk_hash")
     all_chunks = index.unionByName(new_chunks)

@@ -4,8 +4,9 @@ parquet sinks.  Each query WRITES via the engine sink then READS back
 via the engine source; the oracle reads the original parquet — so a
 hash match proves the round trip is lossless.
 
-Writes go under .cache/ inside the repo (gitignored, overwrite-mode,
-keyed by sf so concurrent sf runs don't collide).
+Writes go under the engine's cache root (``tables.cache_path``:
+gitignored, overwrite-mode, keyed by sf so concurrent sf runs don't
+collide).
 """
 
 from __future__ import annotations
@@ -24,14 +25,11 @@ from mo_etl_spark.sources import (
     sink_jsonlines,
     sink_parquet,
 )
-from mo_etl_spark.tables import load_table
+from mo_etl_spark.session import CACHE_ROOT
+from mo_etl_spark.tables import cache_path, derived, load_table, table_tag
 
-_CACHE = "/root/repo/.cache"
-
-
-def _dir(sf_dir: str, name: str) -> str:
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    return os.path.join(_CACHE, tag, name)
+# perfbench/run.py imports this name to find the fixture cache
+_CACHE = CACHE_ROOT
 
 
 @query(
@@ -49,7 +47,7 @@ def source_jsonlines_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction (doubles would round-trip too via shortest-repr, but
     ints make the oracle trivially safe)."""
     prepare(spark)
-    path = _dir(sf_dir, "events_ndjson")
+    path = cache_path(sf_dir, "events_ndjson")
     events = load_table(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
@@ -74,7 +72,7 @@ def source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """part -> CSV with header -> read back with explicit schema (no
     inference scan — the 100 TB pattern)."""
     prepare(spark)
-    path = _dir(sf_dir, "part_csv")
+    path = cache_path(sf_dir, "part_csv")
     part = load_table(spark, sf_dir, "part").select(
         "p_partkey",
         "p_name",
@@ -104,7 +102,7 @@ def sink_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     prepare(spark)
     from mo_etl_spark.functions.numeric import cents
 
-    path = _dir(sf_dir, "supplier_agg_parquet")
+    path = cache_path(sf_dir, "supplier_agg_parquet")
     supplier, nation = (
         load_table(spark, sf_dir, "supplier"),
         load_table(spark, sf_dir, "nation"),
@@ -138,8 +136,8 @@ def source_sqlite_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     prepare(spark)
     from mo_etl_spark.sources import scan_sqlite, sink_sqlite
 
-    os.makedirs(_dir(sf_dir, "sqlite"), exist_ok=True)
-    db = os.path.join(_dir(sf_dir, "sqlite"), "dims.db")
+    os.makedirs(cache_path(sf_dir, "sqlite"), exist_ok=True)
+    db = os.path.join(cache_path(sf_dir, "sqlite"), "dims.db")
     sink_sqlite(load_table(spark, sf_dir, "nation"), db, "nation")
     return scan_sqlite(spark, db, "nation")
 
@@ -163,7 +161,7 @@ def source_partitioned_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_type; the read-back filter prunes to ONE directory before any
     IO (plan shows PartitionFilters, verified in tests/test_plans)."""
     prepare(spark)
-    path = _dir(sf_dir, "events_by_type")
+    path = cache_path(sf_dir, "events_by_type")
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type",
         F.round(F.col("value") * 100).cast("long").alias("value_cents"),
@@ -231,7 +229,7 @@ def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     prepare(spark)
     from mo_etl_spark.sources import scan_orc, sink_orc
 
-    path = _dir(sf_dir, "orders_orc")
+    path = cache_path(sf_dir, "orders_orc")
     sink_orc(load_table(spark, sf_dir, "orders"), path)
     back = scan_orc(spark, path)
     return (
@@ -265,7 +263,7 @@ def source_file_metadata_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     data — the invariant any blame/replay tooling rests on.  _metadata
     is populated per-file by the reader; requesting it adds no scan."""
     prepare(spark)
-    path = _dir(sf_dir, "events_by_type")
+    path = cache_path(sf_dir, "events_by_type")
     events = load_table(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
@@ -287,12 +285,9 @@ def source_file_metadata_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _events_block_store(spark: SparkSession, sf_dir: str) -> str:
     """Materialize events as an 8-block gz-NDJSON store (write-once per
     sf; shared by the batch and streaming block-source queries)."""
-    path = _dir(sf_dir, "events_blocks")
-    success = os.path.join(path, "_SUCCESS")
-    src = os.path.join(sf_dir, "events.parquet")
-    if not os.path.exists(success) or os.path.getmtime(success) < os.path.getmtime(src):
-        from mo_etl_spark.sources.blocks import write_block_store
+    from mo_etl_spark.sources.blocks import write_block_store
 
+    def build(path: str) -> None:
         events = load_table(spark, sf_dir, "events").select(
             "event_id",
             "user_id",
@@ -301,7 +296,8 @@ def _events_block_store(spark: SparkSession, sf_dir: str) -> str:
             F.pmod("event_id", F.lit(8)).cast("long").alias("block_id"),
         )
         write_block_store(events, path)
-    return path
+
+    return derived(sf_dir, "events_blocks", "events", build)
 
 
 
@@ -367,7 +363,7 @@ def source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     prepare(spark)
     from mo_etl_spark.sources import scan_xml, sink_xml
 
-    path = _dir(sf_dir, "part_xml")
+    path = cache_path(sf_dir, "part_xml")
     part = load_table(spark, sf_dir, "part").select(
         "p_brand",
         "p_size",
@@ -408,7 +404,7 @@ def source_text_jsonlines(spark: SparkSession, sf_dir: str) -> DataFrame:
     prepare(spark)
     from mo_etl_spark.sources import scan_text_jsonlines, sink_jsonlines
 
-    path = _dir(sf_dir, "events_ndjson_text")
+    path = cache_path(sf_dir, "events_ndjson_text")
     events = load_table(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
@@ -445,7 +441,7 @@ def bucketed_join_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     prepare(spark)
     import shutil
 
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
+    tag = table_tag(sf_dir)
     t_o, t_l = f"bktq_orders_{tag}", f"bktq_lineitem_{tag}"
 
     # the MANAGED-table location follows the session's warehouse conf —
@@ -526,7 +522,7 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     history (pair with partitioned layout so old directories stay
     untouched)."""
     prepare(spark)
-    path = _dir(sf_dir, "events_evolving")
+    path = cache_path(sf_dir, "events_evolving")
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", F.round(F.col("value") * 100).cast("long").alias("value_cents")
     )
@@ -561,7 +557,7 @@ def sink_range_sorted_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys).  The scan back aggregates per month; a hash match proves
     the re-layout lost nothing."""
     prepare(spark)
-    path = _dir(sf_dir, "orders_range_sorted")
+    path = cache_path(sf_dir, "orders_range_sorted")
     orders = load_table(spark, sf_dir, "orders")
     (
         orders.repartitionByRange(8, "o_orderdate")
@@ -601,7 +597,7 @@ def source_nested_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
     parent with its children (no join at read time) — the reference's
     denormalized-storage argument, kept Catalyst-visible."""
     prepare(spark)
-    path = _dir(sf_dir, "orders_nested")
+    path = cache_path(sf_dir, "orders_nested")
     orders = load_table(spark, sf_dir, "orders").where(F.col("o_orderkey") < 2000)
     li = load_table(spark, sf_dir, "lineitem").where(F.col("l_orderkey") < 2000)
     folded = (
@@ -650,7 +646,7 @@ def sink_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
     reprocessing pipeline rests on.  At 100 TB this is the difference
     between rewriting 1/N of the table and all of it."""
     prepare(spark)
-    path = _dir(sf_dir, "events_dyn_overwrite")
+    path = cache_path(sf_dir, "events_dyn_overwrite")
     events = load_table(spark, sf_dir, "events").where(
         F.col("ts") < F.lit("2024-01-11").cast("timestamp")
     )
@@ -704,9 +700,8 @@ def source_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     in for media bytes — the plumbing (schema, laziness, lineage via
     file name) is identical and the oracle can reproduce it."""
     prepare(spark)
-    root = _dir(sf_dir, "binfiles")
-    marker = os.path.join(root, "_DONE")
-    if not os.path.exists(marker):
+
+    def build(root: str) -> None:
         os.makedirs(root, exist_ok=True)
         rows = (
             load_table(spark, sf_dir, "documents")
@@ -717,8 +712,10 @@ def source_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in rows:
             with open(os.path.join(root, f"doc_{r['doc_id']:05d}.bin"), "wb") as fh:
                 fh.write(r["text"].encode("utf-8"))
-        with open(marker, "w") as fh:
+        with open(os.path.join(root, "_DONE"), "w") as fh:
             fh.write("ok")
+
+    root = derived(sf_dir, "binfiles", "documents", build, done="_DONE")
     bf = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.bin")
@@ -750,7 +747,7 @@ def sink_parquet_zstd(spark: SparkSession, sf_dir: str) -> DataFrame:
     unit test asserts the codec actually landed in the column-chunk
     metadata (a silently ignored option would still hash-match)."""
     prepare(spark)
-    path = _dir(sf_dir, "orders_zstd")
+    path = cache_path(sf_dir, "orders_zstd")
     (
         load_table(spark, sf_dir, "orders")
         .select("o_orderkey", "o_orderpriority", "o_totalprice")
@@ -792,9 +789,8 @@ def source_csv_corrupt_permissive(spark: SparkSession, sf_dir: str) -> DataFrame
     writes to its own partition for replay after the producer fix —
     no second pass over the good rows."""
     prepare(spark)
-    root = _dir(sf_dir, "csv_corrupt")
-    marker = os.path.join(root, "_DONE")
-    if not os.path.exists(marker):
+
+    def build(root: str) -> None:
         os.makedirs(root, exist_ok=True)
         rows = (
             load_table(spark, sf_dir, "nation")
@@ -807,8 +803,10 @@ def source_csv_corrupt_permissive(spark: SparkSession, sf_dir: str) -> DataFrame
                 fh.write(f"{r['n_nationkey']},{r['n_name']}\n")
                 if r["n_nationkey"] % 5 == 0:
                     fh.write(f"BROKEN|{r['n_nationkey']}\n")
-        with open(marker, "w") as fh:
+        with open(os.path.join(root, "_DONE"), "w") as fh:
             fh.write("ok")
+
+    root = derived(sf_dir, "csv_corrupt", "nation", build, done="_DONE")
     df = (
         spark.read.schema("k INT, name STRING, _corrupt STRING")
         .option("mode", "PERMISSIVE")

@@ -47,9 +47,8 @@ from mo_etl_spark.streaming import (
     txn_commit,
     txn_watermark,
 )
-from mo_etl_spark.tables import load_table
-
-_CACHE = "/root/repo/.cache"
+from mo_etl_spark.session import CACHE_ROOT
+from mo_etl_spark.tables import derived, load_table
 
 _FEED_SCHEMA = "event_id BIGINT, user_id BIGINT, event_type STRING, ts TIMESTAMP, value_cents BIGINT"
 
@@ -59,7 +58,7 @@ _FEED_SCHEMA = "event_id BIGINT, user_id BIGINT, event_type STRING, ts TIMESTAMP
 #: overhead — measured 13.7 s -> 3.0 s on the stream-stream join by
 #: narrowing to 8.  A production deployment sizes this to state
 #: volume per key-range, not to the CPU count.
-_STREAM_SHUFFLE = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8")
+_STREAM_SHUFFLE = 8
 
 
 def _stream_tuned(fn):
@@ -74,7 +73,7 @@ def _stream_tuned(fn):
     @functools.wraps(fn)
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
         prepare(spark)
-        with narrowed_shuffle(spark, int(_STREAM_SHUFFLE)):
+        with narrowed_shuffle(spark, _STREAM_SHUFFLE):
             return fn(spark, sf_dir)
 
     return wrapped
@@ -86,23 +85,41 @@ def _feed(spark: SparkSession, sf_dir: str) -> str:
     """Materialize events as the parquet file-drop feed.  Write-once
     per sf: the testdata is immutable, so a completed feed (_SUCCESS
     present) is reused — both stream queries then skip the rewrite."""
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    path = os.path.join(_CACHE, tag, "stream_feed")
-    success = os.path.join(path, "_SUCCESS")
-    src = os.path.join(sf_dir, "events.parquet")
-    stale = os.path.exists(success) and os.path.getmtime(success) < os.path.getmtime(src)
-    if stale or not os.path.exists(success):
-        load_table(spark, sf_dir, "events").select(
+    return derived(
+        sf_dir,
+        "stream_feed",
+        "events",
+        lambda p: load_table(spark, sf_dir, "events").select(
             "event_id", "user_id", "event_type", "ts", cents("value").alias("value_cents")
-        ).write.mode("overwrite").parquet(path)
-    return path
+        ).write.mode("overwrite").parquet(p),
+    )
+
+
+def _write_partitioned(df: DataFrame, path: str, *cols: str) -> None:
+    """Overwrite ``path`` with ``df`` partitioned by ``cols``, one
+    writer task per partition value (so each value is one file)."""
+    df.repartition(*(F.col(c) for c in cols)).write.mode("overwrite").partitionBy(
+        *cols
+    ).parquet(path)
+
+
+def _empty_seed(spark: SparkSession, sf_dir: str, name: str, schema: str) -> str:
+    """A cached empty table of ``schema``: a pure constant, so one
+    parquet write ever, then a zero-copy manifest reference per run (a
+    Spark write job per run is pure fixed cost, r7 job-budget work)."""
+    return derived(
+        sf_dir,
+        name,
+        None,
+        lambda p: spark.createDataFrame([], schema).write.mode("overwrite").parquet(p),
+    )
 
 
 def _scratch(name: str) -> str:
     """Fresh run-scoped dir; sweeps the previous run's dirs of the same
     name so repeated invocations don't accumulate (the sink dir must
     outlive the query — its DataFrame is returned lazily)."""
-    root = os.path.join(_CACHE, "stream_scratch")
+    root = os.path.join(CACHE_ROOT, "stream_scratch")
     os.makedirs(root, exist_ok=True)
     for old in os.listdir(root):
         if old.startswith(f"{name}-"):
@@ -550,16 +567,15 @@ def stream_real_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> Data
     every key forever).  Append mode + availableNow drains the feed;
     the oracle is the exact DISTINCT aggregate."""
     prepare(spark)
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    dup_feed = os.path.join(_CACHE, tag, "stream_feed_dups")
-    success = os.path.join(dup_feed, "_SUCCESS")
-    src = os.path.join(sf_dir, "events.parquet")
-    if not os.path.exists(success) or os.path.getmtime(success) < os.path.getmtime(src):
+
+    def build(path: str) -> None:
         base = load_table(spark, sf_dir, "events").select(
             "event_id", "user_id", "event_type", "ts", cents("value").alias("value_cents")
         )
         redelivered = base.where(F.col("event_id") % 5 == 0)
-        base.unionByName(redelivered).write.mode("overwrite").parquet(dup_feed)
+        base.unionByName(redelivered).write.mode("overwrite").parquet(path)
+
+    dup_feed = derived(sf_dir, "stream_feed_dups", "events", build)
     ckpt = _scratch("dedup_wm_ckpt")
     qname = "stream_real_dedup_within_watermark_sink"
     stream = file_stream_source(spark, dup_feed, _FEED_SCHEMA)
@@ -842,16 +858,14 @@ def _feed_multi(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
     maxFilesPerTrigger=1 yields a genuine multi-batch backfill
     (the single-file feed collapses to one batch).  Write-once per
     sf, mtime-invalidated like _feed."""
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    path = os.path.join(_CACHE, tag, "stream_feed_multi")
-    success = os.path.join(path, "_SUCCESS")
-    src = os.path.join(sf_dir, "events.parquet")
-    stale = os.path.exists(success) and os.path.getmtime(success) < os.path.getmtime(src)
-    if stale or not os.path.exists(success):
-        load_table(spark, sf_dir, "events").select(
+    return derived(
+        sf_dir,
+        "stream_feed_multi",
+        "events",
+        lambda p: load_table(spark, sf_dir, "events").select(
             "event_id", "user_id", "event_type", "ts", cents("value").alias("value_cents")
-        ).repartition(n_files).write.mode("overwrite").parquet(path)
-    return path
+        ).repartition(n_files).write.mode("overwrite").parquet(p),
+    )
 
 
 @query(
@@ -971,23 +985,18 @@ def _incr_feed(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
     deterministic membership; the FINAL pair set is invariant to the
     split, which is the theorem the query proves).  Write-once per sf,
     mtime-invalidated like _feed."""
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    path = os.path.join(_CACHE, tag, "incr_dedup_feed")
-    success_any = os.path.join(path, f"b{n_files - 1}", "_SUCCESS")
-    src = os.path.join(sf_dir, "documents.parquet")
-    stale = os.path.exists(success_any) and os.path.getmtime(
-        success_any
-    ) < os.path.getmtime(src)
-    if stale or not os.path.exists(success_any):
-        from mo_etl_spark.suites.llm import _incr_new_batch
+    from mo_etl_spark.suites.llm import _incr_new_batch
 
-        docs = load_table(spark, sf_dir, "documents")
-        new_batch = _incr_new_batch(docs)
+    def build(path: str) -> None:
+        new_batch = _incr_new_batch(load_table(spark, sf_dir, "documents"))
         for b in range(n_files):
             new_batch.where(F.pmod("doc_id", F.lit(n_files)) == b).coalesce(
                 1
             ).write.mode("overwrite").parquet(os.path.join(path, f"b{b}"))
-    return path
+
+    return derived(
+        sf_dir, "incr_dedup_feed", "documents", build, done=f"b{n_files - 1}/_SUCCESS"
+    )
 
 
 @query(
@@ -2092,33 +2101,26 @@ def _incr_dedup_seed_dirs(
     first-batch reads see an empty table, not ENOENT."""
     from mo_etl_spark.operators import dedup as D
 
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    src = os.path.join(sf_dir, "documents.parquet")
-    idx_snap = os.path.join(
-        _CACHE, tag, f"stream_base_band_index__k{k}_b{bands}_base{base_lt}_ib{n_ib}"
+    idx_snap = derived(
+        sf_dir,
+        f"stream_base_band_index__k{k}_b{bands}_base{base_lt}_ib{n_ib}",
+        "documents",
+        lambda p: _write_partitioned(
+            D.minhash_md5_band_index(base, k=k, bands=bands).withColumn(
+                "ib", D.band_bucket("band", "bk", n_ib)
+            ),
+            p,
+            "ib",
+        ),
     )
-    corp_snap = os.path.join(
-        _CACHE, tag, f"stream_base_corpus__nb{nb}_base{base_lt}"
+    corp_snap = derived(
+        sf_dir,
+        f"stream_base_corpus__nb{nb}_base{base_lt}",
+        "documents",
+        lambda p: _write_partitioned(
+            base.withColumn("db", F.pmod("doc_id", F.lit(nb))), p, "db"
+        ),
     )
-
-    def _stale(snap: str) -> bool:
-        success = os.path.join(snap, "_SUCCESS")
-        return not os.path.exists(success) or os.path.getmtime(
-            success
-        ) < os.path.getmtime(src)
-
-    if _stale(idx_snap):
-        banded = D.minhash_md5_band_index(base, k=k, bands=bands).withColumn(
-            "ib", D.band_bucket("band", "bk", n_ib)
-        )
-        banded.repartition(F.col("ib")).write.mode("overwrite").partitionBy(
-            "ib"
-        ).parquet(idx_snap)
-    if _stale(corp_snap):
-        corp = base.withColumn("db", F.pmod("doc_id", F.lit(nb)))
-        corp.repartition(F.col("db")).write.mode("overwrite").partitionBy(
-            "db"
-        ).parquet(corp_snap)
     # gen-0 commits each table's probe-key PARTITION SPEC atomically
     # with the snapshot it describes (r8 spec evolution: writers read
     # current_spec per trigger; maintenance may re-bucket online)
@@ -2129,15 +2131,12 @@ def _incr_dedup_seed_dirs(
         shutil.rmtree(d, ignore_errors=True)
         seed_batched(d, snap, extra={"spec_n": spec})
     shutil.rmtree(pairs_dir, ignore_errors=True)
-    # the empty pairs seed is a pure constant — one cached parquet
-    # write ever, then a zero-copy manifest reference per run (a Spark
-    # write job per run is pure fixed cost, r7 job-budget work)
-    empty_snap = os.path.join(_CACHE, "empty_pairs_seed")
-    if not os.path.exists(os.path.join(empty_snap, "_SUCCESS")):
-        spark.createDataFrame(
-            [], "id_a BIGINT, id_b BIGINT, jaccard DOUBLE"
-        ).write.mode("overwrite").parquet(empty_snap)
-    seed_batched(pairs_dir, empty_snap)
+    seed_batched(
+        pairs_dir,
+        _empty_seed(
+            spark, sf_dir, "empty_pairs_seed", "id_a BIGINT, id_b BIGINT, jaccard DOUBLE"
+        ),
+    )
     # CROSS-TABLE TXN SEED (r10, VERDICT r9 item #1): the trio's gen-0
     # bases become visible to transactional readers in ONE commit —
     # watermark -1 (bases only, no batches)
@@ -2438,34 +2437,33 @@ def _incr_cdc_seed_dirs(
     dedup verifies by hash equality, so the index IS the state."""
     from mo_etl_spark.operators import text as X
 
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    snap = os.path.join(
-        _CACHE, tag, f"stream_base_cdc_index__b0_base{base_lt}_hb{n_hb}"
+    snap = derived(
+        sf_dir,
+        f"stream_base_cdc_index__b0_base{base_lt}_hb{n_hb}",
+        "documents",
+        lambda p: _write_partitioned(
+            X.cdc_chunks(base).select("doc_id", "chunk_hash").withColumn(
+                "hb", _cdc_bucket(n_hb)
+            ),
+            p,
+            "hb",
+        ),
     )
-    success = os.path.join(snap, "_SUCCESS")
-    src = os.path.join(sf_dir, "documents.parquet")
-    if not os.path.exists(success) or os.path.getmtime(success) < os.path.getmtime(
-        src
-    ):
-        X.cdc_chunks(base).select("doc_id", "chunk_hash").withColumn(
-            "hb", _cdc_bucket(n_hb)
-        ).repartition(F.col("hb")).write.mode("overwrite").partitionBy(
-            "hb"
-        ).parquet(snap)
     shutil.rmtree(idx_dir, ignore_errors=True)
     # zero-copy gen-0 reference (r8) with the probe-key spec committed
     # atomically alongside it (spec evolution, same as the minhash
     # stream — maintenance may re-bucket the index online)
     seed_batched(idx_dir, snap, extra={"spec_n": n_hb})
     shutil.rmtree(pairs_dir, ignore_errors=True)
-    # cached one-time empty seed, referenced per run (no per-run Spark
-    # job, no file copy)
-    empty_snap = os.path.join(_CACHE, "empty_cdc_pairs_seed")
-    if not os.path.exists(os.path.join(empty_snap, "_SUCCESS")):
-        spark.createDataFrame(
-            [], "id_a BIGINT, id_b BIGINT, n_shared_chunks BIGINT"
-        ).write.mode("overwrite").parquet(empty_snap)
-    seed_batched(pairs_dir, empty_snap)
+    seed_batched(
+        pairs_dir,
+        _empty_seed(
+            spark,
+            sf_dir,
+            "empty_cdc_pairs_seed",
+            "id_a BIGINT, id_b BIGINT, n_shared_chunks BIGINT",
+        ),
+    )
 
 
 def _incr_cdc_apply_batch(
@@ -2638,21 +2636,18 @@ def _ivf_query_feed(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
     top-k is independent of batching, so the union of per-trigger
     results equals the one-shot run for ANY split (the invariance the
     query proves).  Write-once per sf, mtime-invalidated."""
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    path = os.path.join(_CACHE, tag, "ivf_query_feed")
-    success_any = os.path.join(path, f"b{n_files - 1}", "_SUCCESS")
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    stale = os.path.exists(success_any) and os.path.getmtime(
-        success_any
-    ) < os.path.getmtime(src)
-    if stale or not os.path.exists(success_any):
+
+    def build(path: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
         qs = emb.where(F.col("vec_id") < 50).select("vec_id", "embedding")
         for b in range(n_files):
             qs.where(F.pmod("vec_id", F.lit(n_files)) == b).coalesce(1).write.mode(
                 "overwrite"
             ).parquet(os.path.join(path, f"b{b}"))
-    return path
+
+    return derived(
+        sf_dir, "ivf_query_feed", "embeddings", build, done=f"b{n_files - 1}/_SUCCESS"
+    )
 
 
 @query(
@@ -2753,6 +2748,39 @@ def _wire_ivf_serving_oracle() -> None:
 _wire_ivf_serving_oracle()
 
 
+def _with_ivf_sub(df: DataFrame, prov: int) -> DataFrame:
+    """The provisional sub-split column of the streamed IVF index."""
+    return df.withColumn(
+        "sub", F.pmod(F.xxhash64(F.col("c_id")), F.lit(prov)).cast("int")
+    )
+
+
+def _ivf_base_snapshot(
+    sf_dir: str,
+    base: DataFrame,
+    cents: DataFrame,
+    cents_lt: int,
+    base_lt: int,
+    prov: int,
+) -> str:
+    """The base corpus's assigned IVF index, (cell, sub)-partitioned:
+    a pure function of the base corpus, so one mtime-invalidated cache
+    snapshot seeds every stream that starts from it."""
+    from mo_etl_spark.operators import similarity as S
+
+    return derived(
+        sf_dir,
+        f"stream_base_ivf_index__c{cents_lt}_base{base_lt}_sub{prov}",
+        "embeddings",
+        lambda p: _write_partitioned(
+            _with_ivf_sub(S.ivf_cells(base, cents).join(base, "c_id"), prov),
+            p,
+            "cell",
+            "sub",
+        ),
+    )
+
+
 def _ivf_corpus_feed(
     spark: SparkSession, sf_dir: str, n_files: int = 4, base_lt: int = 256
 ) -> str:
@@ -2760,14 +2788,8 @@ def _ivf_corpus_feed(
     ``n_files`` parquet files by pmod — the daily embedding drops the
     index-upsert stream consumes.  Write-once per sf,
     mtime-invalidated."""
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    path = os.path.join(_CACHE, tag, f"ivf_corpus_feed_b{base_lt}")
-    success_any = os.path.join(path, f"b{n_files - 1}", "_SUCCESS")
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    stale = os.path.exists(success_any) and os.path.getmtime(
-        success_any
-    ) < os.path.getmtime(src)
-    if stale or not os.path.exists(success_any):
+
+    def build(path: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
         arrivals = emb.where(F.col("vec_id") >= base_lt).select(
             "vec_id", "embedding"
@@ -2776,7 +2798,14 @@ def _ivf_corpus_feed(
             arrivals.where(F.pmod("vec_id", F.lit(n_files)) == b).coalesce(
                 1
             ).write.mode("overwrite").parquet(os.path.join(path, f"b{b}"))
-    return path
+
+    return derived(
+        sf_dir,
+        f"ivf_corpus_feed_b{base_lt}",
+        "embeddings",
+        build,
+        done=f"b{n_files - 1}/_SUCCESS",
+    )
 
 
 @query(
@@ -2872,11 +2901,6 @@ def _grow_ivf_index(
     Returns (embeddings table, centroid frame)."""
     from mo_etl_spark.operators import similarity as S
 
-    def _with_sub(df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            "sub", F.pmod(F.xxhash64(F.col("c_id")), F.lit(prov)).cast("int")
-        )
-
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.where(F.col("vec_id") < base_lt).select(
         F.col("vec_id").alias("c_id"), F.col("embedding").alias("vec")
@@ -2885,20 +2909,7 @@ def _grow_ivf_index(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("vec")
     )
     feed = _ivf_corpus_feed(spark, sf_dir, base_lt=base_lt)
-    # seed: the base corpus's assigned index, cell-partitioned (pure
-    # function of the base corpus -> mtime-invalidated cache snapshot)
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    snap = os.path.join(
-        _CACHE, tag, f"stream_base_ivf_index__c{cents_lt}_base{base_lt}_sub{prov}"
-    )
-    success = os.path.join(snap, "_SUCCESS")
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    if not os.path.exists(success) or os.path.getmtime(success) < os.path.getmtime(
-        src
-    ):
-        _with_sub(S.ivf_cells(base, cents).join(base, "c_id")).repartition(
-            F.col("cell"), F.col("sub")
-        ).write.mode("overwrite").partitionBy("cell", "sub").parquet(snap)
+    snap = _ivf_base_snapshot(sf_dir, base, cents, cents_lt, base_lt, prov)
     shutil.rmtree(idx_dir, ignore_errors=True)
     # layout id of the creation quantizer (r9): every dir assigned
     # under it is stamped, so a later re-quantization's serve knows
@@ -2917,7 +2928,7 @@ def _grow_ivf_index(
             F.col("vec_id").alias("c_id"), F.col("embedding").alias("vec")
         )
         idempotent_batch_write(
-            _with_sub(S.ivf_cells(b, cents).join(b, "c_id")),
+            _with_ivf_sub(S.ivf_cells(b, cents).join(b, "c_id"), prov),
             idx_dir,
             batch_id,
             partition_cols=["cell", "sub"],
@@ -3380,33 +3391,15 @@ def _vec_group_seed_dirs(
     cents = emb.where(F.col("vec_id") < cents_lt).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("vec")
     )
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    src = os.path.join(sf_dir, "embeddings.parquet")
-
-    def _stale(snap: str) -> bool:
-        success = os.path.join(snap, "_SUCCESS")
-        return not os.path.exists(success) or os.path.getmtime(
-            success
-        ) < os.path.getmtime(src)
-
-    corp_snap = os.path.join(
-        _CACHE, tag, f"stream_base_vec_corpus__nb{nb}_base{base_lt}"
+    corp_snap = derived(
+        sf_dir,
+        f"stream_base_vec_corpus__nb{nb}_base{base_lt}",
+        "embeddings",
+        lambda p: _write_partitioned(
+            base.withColumn("db", F.pmod("c_id", F.lit(nb))), p, "db"
+        ),
     )
-    if _stale(corp_snap):
-        base.withColumn("db", F.pmod("c_id", F.lit(nb))).repartition(
-            F.col("db")
-        ).write.mode("overwrite").partitionBy("db").parquet(corp_snap)
-    idx_snap = os.path.join(
-        _CACHE,
-        tag,
-        f"stream_base_ivf_index__c{cents_lt}_base{base_lt}_sub{prov}",
-    )
-    if _stale(idx_snap):
-        S.ivf_cells(base, cents).join(base, "c_id").withColumn(
-            "sub", F.pmod(F.xxhash64(F.col("c_id")), F.lit(prov)).cast("int")
-        ).repartition(F.col("cell"), F.col("sub")).write.mode(
-            "overwrite"
-        ).partitionBy("cell", "sub").parquet(idx_snap)
+    idx_snap = _ivf_base_snapshot(sf_dir, base, cents, cents_lt, base_lt, prov)
     qid0 = S.quantizer_id(cents)
     shutil.rmtree(corpus_dir, ignore_errors=True)
     shutil.rmtree(idx_dir, ignore_errors=True)
@@ -3462,11 +3455,7 @@ def _vec_group_apply_batch(
     if crash_point == "after_corpus":
         raise PlantedCrash("after_corpus")
     idempotent_batch_write(
-        S.ivf_cells(b, cents)
-        .join(b, "c_id")
-        .withColumn(
-            "sub", F.pmod(F.xxhash64(F.col("c_id")), F.lit(prov)).cast("int")
-        ),
+        _with_ivf_sub(S.ivf_cells(b, cents).join(b, "c_id"), prov),
         idx_dir,
         batch_id,
         partition_cols=["cell", "sub"],

@@ -8,8 +8,11 @@ views here.
 from __future__ import annotations
 
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from mo_etl_spark.session import CACHE_ROOT
 
 TABLES = (
     "region",
@@ -79,6 +82,47 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     _PLAN_MEMO[key] = (mtime, df)
     return df
+
+
+def cache_path(sf_dir: str, name: str) -> str:
+    """Where the derived artifact ``name`` of the scale factor at
+    ``sf_dir`` lives: ``CACHE_ROOT/<last component of sf_dir>/<name>``."""
+    return os.path.join(CACHE_ROOT, sf_dir.rstrip("/").rsplit("/", 1)[-1], name)
+
+
+def table_tag(sf_dir: str) -> str:
+    """The scale factor's cache-dir name as a table-name token: managed
+    tables share one warehouse across scale factors."""
+    tag = os.path.basename(os.path.dirname(cache_path(sf_dir, "")))
+    return tag.replace(".", "_").replace("-", "_")
+
+
+def is_stale(done: str, src: str | None) -> bool:
+    """True when the completion marker ``done`` is missing or older
+    than the source file ``src`` (``None``: no source, only presence)."""
+    return not os.path.exists(done) or (
+        src is not None and os.path.getmtime(done) < os.path.getmtime(src)
+    )
+
+
+def derived(
+    sf_dir: str,
+    name: str,
+    src: str | None,
+    build: Callable[[str], object],
+    done: str = "_SUCCESS",
+) -> str:
+    """Path of the persisted artifact ``cache_path(sf_dir, name)``,
+    built by ``build(path)`` only when ``<path>/<done>`` is missing or
+    older than the source table ``<sf_dir>/<src>.parquet`` — the one
+    build-if-stale rule of the engine's source-invalidated caches.
+    ``src=None`` builds once (a constant seed); ``done`` names the
+    marker a multi-dir artifact writes last (e.g. ``"b3/_SUCCESS"``)."""
+    path = cache_path(sf_dir, name)
+    source = None if src is None else os.path.join(sf_dir, f"{src}.parquet")
+    if is_stale(os.path.join(path, done), source):
+        build(path)
+    return path
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -4,7 +4,11 @@ vs a direct json read of the same files."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
+
+from mo_etl_spark.session import CACHE_ROOT
 
 SF = "/root/testdata/sf0.001"
 
@@ -18,7 +22,7 @@ def test_block_store_partitions_and_fidelity(spark):
     )
     from mo_etl_spark.tables import load_table
 
-    path = "/root/repo/.cache/test_blocks"
+    path = os.path.join(CACHE_ROOT, "test_blocks")
     events = load_table(spark, SF, "events").select(
         "event_id",
         "user_id",
@@ -52,7 +56,6 @@ def test_block_stream_incremental_microbatches(spark):
     microbatches (maxBlocksPerTrigger=3 -> >= 3 non-empty batches),
     and the final complete-mode aggregate equals the batch read —
     exactly-once, no block lost or double-counted."""
-    import os
     import shutil
     import uuid
 
@@ -64,7 +67,7 @@ def test_block_stream_incremental_microbatches(spark):
     sf_dir = "/root/testdata/sf0.001"
     path = _events_block_store(spark, sf_dir)
     register_block_source(spark)
-    ckpt = f"/root/repo/.cache/test_pyblocks_ckpt-{uuid.uuid4().hex[:8]}"
+    ckpt = os.path.join(CACHE_ROOT, f"test_pyblocks_ckpt-{uuid.uuid4().hex[:8]}")
     qname = "test_block_stream_sink"
     agg = (
         spark.readStream.format("ndjson_blocks")
@@ -107,7 +110,6 @@ def test_block_stream_kill_and_resume_exactly_once(spark):
     blocks, restart from the same checkpoint — the union of both runs'
     foreachBatch outputs must hold every event exactly once (offsets
     restored from the checkpoint, no block lost or double-read)."""
-    import os
     import shutil
     import uuid
 
@@ -117,7 +119,7 @@ def test_block_stream_kill_and_resume_exactly_once(spark):
     sf_dir = "/root/testdata/sf0.001"
     src = _events_block_store(spark, sf_dir)
     register_block_source(spark)
-    base = f"/root/repo/.cache/blkresume-{uuid.uuid4().hex[:6]}"
+    base = os.path.join(CACHE_ROOT, f"blkresume-{uuid.uuid4().hex[:6]}")
     store, ckpt, out = f"{base}/store", f"{base}/ckpt", f"{base}/out"
     os.makedirs(store)
     ids = sorted(d for d in os.listdir(src) if d.startswith("block_id="))

@@ -77,10 +77,11 @@ def test_zstd_codec_lands_in_parquet_metadata(spark, sf_dir):
 
     import pyarrow.parquet as pq
 
-    from mo_etl_spark.suites.sources import _dir, sink_parquet_zstd
+    from mo_etl_spark.suites.sources import sink_parquet_zstd
+    from mo_etl_spark.tables import cache_path
 
     sink_parquet_zstd(spark, sf_dir).collect()
-    files = glob.glob(_dir(sf_dir, "orders_zstd") + "/*.parquet")
+    files = glob.glob(cache_path(sf_dir, "orders_zstd") + "/*.parquet")
     assert files
     md = pq.ParquetFile(files[0]).metadata
     codecs = {

@@ -425,24 +425,21 @@ def test_incremental_pruned_broadcast_guard_fallback(spark, sf_dir):
     back to a shuffle join — identical pair set (correctness kept),
     dynamicpruningexpression gone (DPP lost, by design, instead of a
     broadcast OOM crash under a band hot-spot)."""
-    import os
-
     from pyspark.sql import functions as F
 
     from mo_etl_spark.operators import dedup as D
     from mo_etl_spark.suites.llm import _incr_new_batch, llm_dedup_incremental_pruned
-    from mo_etl_spark.tables import load_table
+    from mo_etl_spark.tables import cache_path, load_table
 
     normal = llm_dedup_incremental_pruned(spark, sf_dir)
     want = sorted(tuple(r) for r in normal.collect())
     assert "dynamicpruningexpression" in normal._jdf.queryExecution().toString()
 
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     index = spark.read.parquet(
-        os.path.join("/root/repo/.cache", tag, "minhash_band_index__k16_b8_base400")
+        cache_path(sf_dir, "minhash_band_index__k16_b8_base400")
     )
     corpus = spark.read.parquet(
-        os.path.join("/root/repo/.cache", tag, "incr_corpus_bucketed__nb16_base400")
+        cache_path(sf_dir, "incr_corpus_bucketed__nb16_base400")
     )
     docs = load_table(spark, sf_dir, "documents")
     new_batch = _incr_new_batch(docs)
@@ -806,6 +803,7 @@ def test_lsh_recall_gate_discriminates_expansion_bug(spark):
 
     from mo_etl_spark.operators import similarity as S
     from mo_etl_spark.suites.llm import _emb, _recall_assert, llm_recall_lsh_at5
+    from mo_etl_spark.tables import cache_path
 
     sf = "/root/testdata/sf0.01"
     healthy = llm_recall_lsh_at5(spark, sf).first()
@@ -815,7 +813,7 @@ def test_lsh_recall_gate_discriminates_expansion_bug(spark):
     q = emb.where(F.col("vec_id") < 50).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("vec")
     )
-    idx_path = "/root/repo/.cache/sf0.01/lsh_recall_gate__p4_s42_c24"
+    idx_path = cache_path(sf, "lsh_recall_gate__p4_s42_c24")
     indexed = S.load_ann_index(
         spark, idx_path, {"kind": "lsh_vec", "n_planes": 4, "seed": 42},
         schema="c_id BIGINT, vec ARRAY<FLOAT>, bucket INT, sub INT",

@@ -6,7 +6,12 @@ brute-force similarity ops."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
+
+from mo_etl_spark.session import CACHE_ROOT
+from mo_etl_spark.tables import cache_path
 
 
 def plan_of(df) -> str:
@@ -151,7 +156,7 @@ def test_bucketed_join_has_no_shuffle(spark, sf001):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
         # the embedded metastore is per-session but warehouse files
         # persist — a stale location blocks re-creation
-        shutil.rmtree(f"/root/repo/.cache/warehouse/{t}", ignore_errors=True)
+        shutil.rmtree(os.path.join(CACHE_ROOT, "warehouse", t), ignore_errors=True)
     orders.write.bucketBy(8, "o_orderkey").sortBy("o_orderkey").saveAsTable("bkt_orders")
     li.write.bucketBy(8, "l_orderkey").sortBy("l_orderkey").saveAsTable("bkt_lineitem")
     joined = spark.table("bkt_orders").join(
@@ -380,7 +385,7 @@ def test_dynamic_partition_pruning_from_dim_filter(spark, sf001):
     from pyspark.sql import functions as F
     from mo_etl_spark.tables import load_table
 
-    path = "/root/repo/.cache/sf0_001/events_dpp"
+    path = os.path.join(CACHE_ROOT, "sf0_001", "events_dpp")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         load_table(spark, sf001, "events").select(
             "event_id", "user_id", "event_type",
@@ -412,7 +417,7 @@ def test_range_sorted_sink_yields_disjoint_file_bands(spark, sf001):
 
     sink_range_sorted_layout(spark, sf001).count()  # materialize the sink
     bands = []
-    for f in glob.glob("/root/repo/.cache/sf0.001/orders_range_sorted/*.parquet"):
+    for f in glob.glob(cache_path(sf001, "orders_range_sorted/*.parquet")):
         md = pq.ParquetFile(f).metadata
         idx = md.schema.names.index("o_orderdate")
         lo = min(md.row_group(i).column(idx).statistics.min for i in range(md.num_row_groups))
@@ -642,7 +647,7 @@ def test_pagerank_bucketed_edges_contribution_agg_no_shuffle(spark, sf001):
     # teardown path derived from the SESSION's warehouse (ADVICE r4:
     # a hard-coded path leaks the table under other session configs)
     wh = spark.conf.get(
-        "spark.sql.warehouse.dir", "/root/repo/.cache/warehouse"
+        "spark.sql.warehouse.dir", os.path.join(CACHE_ROOT, "warehouse")
     ).removeprefix("file:")
     spark.sql(f"DROP TABLE IF EXISTS {t}")
     shutil.rmtree(os.path.join(wh, t), ignore_errors=True)
@@ -976,7 +981,7 @@ def test_pagerank_cobucketed_no_rank_broadcast(spark, sf001):
 
     ts = ("bkt_pr_src", "bkt_pr_gate_src", "bkt_pr_gate")
     wh = spark.conf.get(
-        "spark.sql.warehouse.dir", "/root/repo/.cache/warehouse"
+        "spark.sql.warehouse.dir", os.path.join(CACHE_ROOT, "warehouse")
     ).removeprefix("file:")
     for t in ts:
         spark.sql(f"DROP TABLE IF EXISTS {t}")

@@ -11,11 +11,13 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from mo_etl_spark.session import CACHE_ROOT
+
 
 @pytest.fixture()
 def tmpdir():
-    os.makedirs("/root/repo/.cache", exist_ok=True)
-    d = tempfile.mkdtemp(prefix="moetl_stream_", dir="/root/repo/.cache")
+    os.makedirs(CACHE_ROOT, exist_ok=True)
+    d = tempfile.mkdtemp(prefix="moetl_stream_", dir=CACHE_ROOT)
     yield d
     shutil.rmtree(d, ignore_errors=True)
 
@@ -207,7 +209,7 @@ def test_update_mode_emits_multiple_batches(spark, sf_dir):
         r["event_type"]: r["n"]
         for r in stream_real_update_mode_upsert(spark, sf_dir).collect()
     }
-    out_dirs = glob.glob("/root/repo/.cache/stream_scratch/upd_out-*")
+    out_dirs = glob.glob(os.path.join(CACHE_ROOT, "stream_scratch", "upd_out-*"))
     versions = spark.read.parquet(out_dirs[0])
     per_key = (
         versions.groupBy("event_type")
@@ -1293,7 +1295,7 @@ def test_retract_contract_query_erases_both_tables(spark):
     }
     assert pairs and not any(a % 37 == 0 and a < 400 for a, _ in pairs)
 
-    scratch = "/root/repo/.cache/stream_scratch"
+    scratch = os.path.join(CACHE_ROOT, "stream_scratch")
     [idx] = glob.glob(os.path.join(scratch, "retract_dedup_index-*"))
     [arr] = glob.glob(os.path.join(scratch, "retract_dedup_arrived-*"))
     idx_ids = {
@@ -7614,3 +7616,37 @@ def test_group_lease_contention_fails_named_within_wait(tmpdir, monkeypatch):
     finally:
         S._release_lease(group, token)
     assert S.txn_commit(group, 0, {"t": root}) == 0  # released: proceeds
+
+
+def test_empty_staged_dirs_published_and_dropped(spark, tmpdir):
+    """An empty trigger's staged dir (a partitioned write of no rows
+    leaves ``b<id>.stage.<branch>`` holding only ``_SUCCESS``) is renamed
+    by publish_branch and removed by drop_branch like any other: no
+    ``*.stage.<branch>`` dir survives either."""
+    import glob
+
+    from mo_etl_spark import streaming as S
+
+    def _only_success(d):
+        names = [n for n in os.listdir(d) if not n.endswith(".crc")]
+        return names == ["_SUCCESS"]
+
+    g, root = f"{tmpdir}/g", f"{tmpdir}/t"
+    empty = spark.createDataFrame([], "k BIGINT, p INT")
+    S.idempotent_batch_write(
+        spark.range(3).select(F.col("id").alias("k")), root, 0
+    )
+    S.txn_commit(g, 0, {"t": root})
+    S.stage_batch_write(empty, root, 1, "pub", partition_cols=["p"])
+    S.txn_commit(g, 1, {"t": root}, branch="pub")
+    assert _only_success(f"{root}/b1.stage.pub")
+    assert S.publish_branch(g, "pub") == 1
+    assert glob.glob(f"{root}/*.stage.pub") == []
+    assert os.path.isdir(f"{root}/b1")
+    S.stage_batch_write(empty, root, 2, "audit", partition_cols=["p"])
+    S.txn_commit(g, 2, {"t": root}, branch="audit")
+    assert _only_success(f"{root}/b2.stage.audit")
+    S.drop_branch(g, "audit")
+    assert glob.glob(f"{root}/*.stage.audit") == []
+    got = S.read_batched(spark, root, schema="k BIGINT").collect()
+    assert sorted(r["k"] for r in got) == [0, 1, 2]
