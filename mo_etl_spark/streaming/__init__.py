@@ -84,12 +84,14 @@ def idempotent_batch_write(
     (hive-style ``col=value`` subdirs) — the PROBE-KEYED state layout
     (VERDICT r5 item #1): a persisted index/corpus partitioned by its
     probe key serves later triggers via partition pruning instead of
-    full state scans.  The batch is coalesced to ONE task first: a
-    micro-batch is one trigger's data, so a single task writing one
-    file per partition value costs no shuffle and no n_tasks ×
-    n_partitions slivers (a deployment with huge triggers would
-    ``repartition(partition_cols)`` instead — the index-SNAPSHOT
-    builds in the suites do exactly that).
+    full state scans.
+
+    The write is DATA-PROPORTIONAL (_write_width): the batch is
+    coalesced to ceil(estimated bytes / maxPartitionBytes) tasks — the
+    width rule _pack_union reads with — so a trigger that fits one
+    split lands as one file (one file per partition value with
+    ``partition_cols``), not one file per core, and a huge trigger
+    keeps its parallelism (coalesce never widens).
 
     A replay whose ``b<batch_id>`` dir is already COMPLETE (its
     ``_SUCCESS`` marker exists) is a NO-OP: the batch content is
@@ -101,16 +103,7 @@ def idempotent_batch_write(
     list, failing the build mid-job (safe — nothing was committed —
     but a spurious compaction abort).  Only an INCOMPLETE dir (crash
     mid-write, no marker) is rewritten."""
-    dst = batch_subdir(root, batch_id)
-    if os.path.exists(os.path.join(dst, "_SUCCESS")):
-        return
-    w = batch_df
-    if partition_cols:
-        w = w.coalesce(1)
-    w = w.write.mode("overwrite")
-    if partition_cols:
-        w = w.partitionBy(*partition_cols)
-    w.parquet(dst)
+    _write_batch(batch_df, batch_subdir(root, batch_id), partition_cols)
 
 
 def stage_batch_write(
@@ -129,19 +122,55 @@ def stage_batch_write(
     cannot give that guarantee).  publish_branch renames the staged
     dirs to their ``b<id>`` names inside the publish — still inert
     until the pointer moves, because their ids sit above the
-    watermark until exactly that moment.  Same replay-idempotent
-    _SUCCESS discipline as the main-path write."""
+    watermark until exactly that moment.  Same replay-idempotent,
+    data-proportional write as the main path (_write_batch)."""
     _validate_branch(branch)
     dst = os.path.join(root, f"b{int(batch_id)}.stage.{branch}")
+    _write_batch(batch_df, dst, partition_cols)
+
+
+def _write_batch(
+    batch_df: DataFrame, dst: str, partition_cols: Sequence[str] | None
+) -> None:
+    """THE batch-dir write: a no-op when ``dst`` is complete
+    (``_SUCCESS``), else an overwrite at the data-proportional width."""
     if os.path.exists(os.path.join(dst, "_SUCCESS")):
         return
-    w = batch_df
-    if partition_cols:
-        w = w.coalesce(1)
-    w = w.write.mode("overwrite")
+    w = _write_width(batch_df).write.mode("overwrite")
     if partition_cols:
         w = w.partitionBy(*partition_cols)
     w.parquet(dst)
+
+
+def _write_width(df: DataFrame) -> DataFrame:
+    """Coalesce a batch to _split_width(its optimized plan's
+    ``sizeInBytes``).  Every write task deserializes the job's Hadoop
+    conf twice, a fixed cost however few rows it writes, so a small
+    trigger written at its scan or range width (``defaultParallelism``)
+    pays it per core for a handful of ~10 KB files.  The estimate is
+    an upper bound for filters, projections and joins, so the width
+    errs wide; coalesce never widens past the input's partitions.
+    Left unchanged when the plan has no usable estimate
+    (``sizeInBytes`` at ``spark.sql.defaultSizeInBytes``, or a join's
+    product of its sides' sizes past any partition count) or already
+    ends in a caller's coalesce at most that wide (an adjacent
+    coalesce would replace it — Spark's CollapseRepartition keeps the
+    outer one)."""
+    spark = df.sparkSession
+    plan = df._jdf.queryExecution().optimizedPlan()
+    nbytes = int(plan.stats().sizeInBytes())
+    width = _split_width(spark, nbytes)
+    if (
+        nbytes >= spark._jsparkSession.sessionState().conf().defaultSizeInBytes()
+        or width >= 2**31
+        or (
+            plan.nodeName() == "Repartition"
+            and not plan.shuffle()
+            and plan.numPartitions() <= width
+        )
+    ):
+        return df
+    return df.coalesce(width)
 
 
 def idempotent_batch_write_to(root: str) -> Callable[[DataFrame, int], None]:
@@ -3455,11 +3484,18 @@ def _pack_union(spark: SparkSession, df: DataFrame, total_bytes: int) -> DataFra
     pruning / static probed-cell filters are untouched.  The bytes
     come from the resolver's one walk per dir (ADVICE r11), never a
     second listing."""
+    return df.coalesce(_split_width(spark, total_bytes))
+
+
+def _split_width(spark: SparkSession, nbytes: int) -> int:
+    """THE data-proportional width rule: ceil(nbytes /
+    ``spark.sql.files.maxPartitionBytes``), at least 1 — one task per
+    read split's worth of bytes.  Sizes both the packed union reads
+    (_pack_union) and the batch writes (_write_width)."""
     max_split = _size_conf_bytes(
         spark, "spark.sql.files.maxPartitionBytes", 128 * 1024 * 1024
     )
-    target = max(1, -(-total_bytes // max(max_split, 1)))
-    return df.coalesce(int(target))
+    return max(1, -(-nbytes // max(max_split, 1)))
 
 
 def _size_conf_bytes(spark: SparkSession, key: str, default: int) -> int:

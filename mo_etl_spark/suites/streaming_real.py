@@ -2346,11 +2346,7 @@ def _incr_dedup_apply_batch(
         pairs = spark.createDataFrame([], "id_a BIGINT, id_b BIGINT, jaccard DOUBLE")
     if plan_probe is not None:
         plan_probe["verify"] = pairs._jdf.queryExecution().toString()
-    # one output file: per-trigger pairs are batch-bounded (every pair
-    # has one side in today's batch), so a 32-task tiny-file write is
-    # pure commit overhead — a deployment with huge triggers would
-    # raise this to a small constant, not remove it
-    idempotent_batch_write(pairs.coalesce(1), pairs_dir, batch_id)
+    idempotent_batch_write(pairs, pairs_dir, batch_id)
     if crash_point == "mid_pairs":
         # a kill mid-pairs-write: data landed but the marker didn't
         try:
@@ -2544,9 +2540,7 @@ def _incr_cdc_apply_batch(
     )
     if plan_probe is not None:
         plan_probe["probe"] = pairs._jdf.queryExecution().toString()
-    # one output file: per-trigger pairs are batch-bounded (r7
-    # job-budget cut, same as the minhash stream)
-    idempotent_batch_write(pairs.coalesce(1), pairs_dir, batch_id)
+    idempotent_batch_write(pairs, pairs_dir, batch_id)
 
 
 @query(

@@ -8,14 +8,14 @@ def test_contract_inventory_in_sync():
     """INVENTORY.md (regenerated by tools/gen_inventory.py) must list
     exactly the registered queries with their oracle status — a stale
     inventory misreports coverage to the judge."""
+    import os
     import re
-    import sys
 
-    sys.path.insert(0, "/root/repo")
     from mo_etl_spark.registry import all_queries
+    from mo_etl_spark.session import ENGINE_ROOT
 
     qs = all_queries()
-    text = open("/root/repo/INVENTORY.md").read()
+    text = open(os.path.join(ENGINE_ROOT, "INVENTORY.md")).read()
     listed = set(re.findall(r"^\| `([a-z0-9_]+)` \|", text, re.M))
     assert listed == set(qs), (
         sorted(set(qs) - listed),
@@ -32,9 +32,6 @@ def test_contract_inventory_in_sync():
 def test_contract_entry_exports():
     """__spark_entry__ exports exactly the registry, and every oracle
     is non-empty SQL text."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as e
     from mo_etl_spark.registry import all_queries
 

@@ -4,6 +4,7 @@ microbatches through a transform into a sink with checkpointing."""
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
 import tempfile
@@ -7650,3 +7651,113 @@ def test_empty_staged_dirs_published_and_dropped(spark, tmpdir):
     assert glob.glob(f"{root}/*.stage.audit") == []
     got = S.read_batched(spark, root, schema="k BIGINT").collect()
     assert sorted(r["k"] for r in got) == [0, 1, 2]
+
+
+# ---------------------------------------------------------------------------
+# Data-proportional batch writes: a batch is written at
+# ceil(estimated bytes / maxPartitionBytes) tasks, not at the width it
+# arrives with.
+# ---------------------------------------------------------------------------
+
+
+def _batch(spark, n, parts):
+    return spark.range(0, n, 1, parts).select(
+        F.col("id").alias("key"),
+        (F.col("id") % 97).cast("int").alias("grp"),
+        (F.col("id") * 0.5).alias("val"),
+    )
+
+
+def _parquet_files(d):
+    import glob
+
+    return sorted(glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True))
+
+
+@contextlib.contextmanager
+def _conf(spark, key, value):
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+
+def test_write_small_batch_lands_as_one_file(spark, tmpdir):
+    """A 5k-row trigger fits one read split, so both batch writers land
+    it as ONE part file, whatever the session's core count."""
+    from mo_etl_spark import streaming as S
+
+    df = _batch(spark, 5000, spark.sparkContext.defaultParallelism)
+    root = f"{tmpdir}/t"
+    S.idempotent_batch_write(df, root, 0)
+    S.stage_batch_write(df, root, 1, "audit")
+    assert len(_parquet_files(f"{root}/b0")) == 1
+    assert len(_parquet_files(f"{root}/b1.stage.audit")) == 1
+    assert S.read_batched(spark, root).count() == 5000
+
+
+def test_write_width_follows_split_size(spark, tmpdir):
+    """With maxPartitionBytes lowered so the plan estimate spans k
+    splits, the write gives more than one file and at most k, and the
+    rows read back equal an unsized write's.  A caller's narrower
+    coalesce is kept, and a plan without an estimate (``sizeInBytes``
+    at ``spark.sql.defaultSizeInBytes``) keeps its own width."""
+    from mo_etl_spark import streaming as S
+
+    df = _batch(spark, 5000, 8)
+    est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    k = 3
+    plain, sized = f"{tmpdir}/plain", f"{tmpdir}/sized"
+    df.write.parquet(S.batch_subdir(plain, 0))
+    with _conf(spark, "spark.sql.files.maxPartitionBytes", str(est // k + 1)):
+        S.idempotent_batch_write(df, sized, 0)
+        S.idempotent_batch_write(df.coalesce(1), sized, 1)
+        assert 1 < len(_parquet_files(f"{sized}/b0")) <= k
+        assert len(_parquet_files(f"{sized}/b1")) == 1
+        got = _sorted_rows(S.read_batched(spark, sized, max_batch=0))
+    assert len(_parquet_files(f"{plain}/b0")) == 8
+    assert got == _sorted_rows(S.read_batched(spark, plain))
+    with _conf(spark, "spark.sql.defaultSizeInBytes", str(est)):
+        S.idempotent_batch_write(df, sized, 2)
+    assert len(_parquet_files(f"{sized}/b2")) == 8
+
+
+def test_write_replay_of_complete_dir_is_noop(spark, tmpdir):
+    """A replay onto a complete dir (``_SUCCESS`` present) rewrites
+    nothing, even with different content; a torn dir (no marker) is
+    rewritten at the sized width."""
+    from mo_etl_spark import streaming as S
+
+    root = f"{tmpdir}/t"
+    S.idempotent_batch_write(_batch(spark, 5000, 4), root, 0)
+    before = _parquet_files(f"{root}/b0")
+    S.idempotent_batch_write(_batch(spark, 10, 4), root, 0)
+    assert _parquet_files(f"{root}/b0") == before
+    assert S.read_batched(spark, root).count() == 5000
+    os.remove(f"{root}/b0/_SUCCESS")
+    S.idempotent_batch_write(_batch(spark, 10, 4), root, 0)
+    assert len(_parquet_files(f"{root}/b0")) == 1
+    assert S.read_batched(spark, root).count() == 10
+
+
+def test_write_partitioned_one_file_per_value(spark, tmpdir):
+    """A ``partition_cols`` write of a small batch gives one file per
+    partition value, not one per (task, value) pair."""
+    from mo_etl_spark import streaming as S
+
+    df = _batch(spark, 5000, 8).withColumn("p", F.col("key") % 3)
+    root = f"{tmpdir}/t"
+    S.idempotent_batch_write(df, root, 0, partition_cols=["p"])
+    S.stage_batch_write(df, root, 1, "audit", partition_cols=["p"])
+    for d in (f"{root}/b0", f"{root}/b1.stage.audit"):
+        files = _parquet_files(d)
+        assert sorted(os.path.basename(os.path.dirname(f)) for f in files) == [
+            "p=0", "p=1", "p=2",
+        ]
+    got = S.read_batched(spark, root, partitioned=True)
+    assert got.groupBy("p").count().count() == 3 and got.count() == 5000

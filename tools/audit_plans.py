@@ -16,9 +16,10 @@ Usage: python tools/audit_plans.py [--sf DIR] [-x N]
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 #: queries whose cartesian/nested-loop is the contract, each with why:
 CARTESIAN_OK = {

@@ -4,7 +4,7 @@ substring spans/cut, sessionize (plain + routed), as-of join, IVF and
 PQ serving, PageRank, DBSCAN neighbor stage, connected components
 (both routes).
 
-``gen``  — builds a 10x dataset at /root/repo/.scratch/sf1 from
+``gen``  — builds a 10x dataset at ``<checkout>/.scratch/sf1`` from
   /root/testdata/sf0.1 (read-only) by unioning 10 key-offset replicas.
   Replica perturbations keep the DUPLICATE/DENSITY STRUCTURE constant
   (the point is weak scaling of the algorithm, not an artificial 10x
@@ -39,13 +39,17 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from mo_etl_spark.session import ENGINE_ROOT  # noqa: E402
+
+#: generated datasets and their indexes (kept out of the fixture cache)
+SCRATCH = os.path.join(ENGINE_ROOT, ".scratch")
 SF01 = "/root/testdata/sf0.1"
-SF1 = "/root/repo/.scratch/sf1"
-SF3 = "/root/repo/.scratch/sf3"  # 30x — the r5 extra decade (item #6)
+SF1 = os.path.join(SCRATCH, "sf1")
+SF3 = os.path.join(SCRATCH, "sf3")  # 30x — the r5 extra decade (item #6)
 REPLICAS = 10
 
 
@@ -242,8 +246,8 @@ def workloads(spark, d: str, scale: float, ops: list[str] | None = None):
     incr_batch = docs.where(F.col("doc_id") < 250).select(
         (F.col("doc_id") + 100_000_000).alias("doc_id"), trunc.alias("text")
     )
-    idx_p = f"/root/repo/.scratch/incr_idx_{tag}"
-    corp_p = f"/root/repo/.scratch/incr_corp_{tag}_nb{nb_incr}"
+    idx_p = f"{SCRATCH}/incr_idx_{tag}"
+    corp_p = f"{SCRATCH}/incr_corp_{tag}_nb{nb_incr}"
     if wanted("incr_batch_fixed") and not os.path.exists(os.path.join(idx_p, "_SUCCESS")):
         minhash_md5_band_index(docs_b, k=16, bands=8).write.mode(
             "overwrite"
@@ -281,7 +285,7 @@ def workloads(spark, d: str, scale: float, ops: list[str] | None = None):
     # an object-store deployment would keep the parallel listing.
     nb_s = int(256 * scale)
     nib_s = int(512 * scale)
-    sroot = f"/root/repo/.scratch/stream_incr_{tag}_nb{nb_s}_ib{nib_s}"
+    sroot = f"{SCRATCH}/stream_incr_{tag}_nb{nb_s}_ib{nib_s}"
     sidx, sarr, spr = f"{sroot}/idx", f"{sroot}/arr", f"{sroot}/pairs"
     stream_batch = None
     sdocs = None
@@ -380,7 +384,7 @@ def workloads(spark, d: str, scale: float, ops: list[str] | None = None):
     # "corpus-flat per trigger" true WITHOUT a production-sized
     # upfront guess.
     SPEC_N0 = 16
-    spec_root = f"/root/repo/.scratch/spec_evo_{tag}"
+    spec_root = f"{SCRATCH}/spec_evo_{tag}"
     spec_batch = None
     if wanted("dedup_probe_frozen_spec", "dedup_probe_evolved_spec"):
         from mo_etl_spark import streaming as SS
@@ -481,7 +485,7 @@ def workloads(spark, d: str, scale: float, ops: list[str] | None = None):
 
     # persisted IVF index with vectors, partitioned by cell (untimed
     # once-per-snapshot build, like production)
-    ivf_idx_p = f"/root/repo/.scratch/ivf_vec_idx_{tag}"
+    ivf_idx_p = f"{SCRATCH}/ivf_vec_idx_{tag}"
     if wanted("ivf_serve_pruned", "ivf_retract_serve") and not os.path.exists(
         os.path.join(ivf_idx_p, "_SUCCESS")
     ):
@@ -504,7 +508,7 @@ def workloads(spark, d: str, scale: float, ops: list[str] | None = None):
 
     # IVF-PQ code index: cell assignment + 8-byte code arrays,
     # partitioned by cell (untimed once-per-snapshot build)
-    ivfpq_idx_p = f"/root/repo/.scratch/ivfpq_code_idx_{tag}"
+    ivfpq_idx_p = f"{SCRATCH}/ivfpq_code_idx_{tag}"
     if wanted("ivfpq_serve") and not os.path.exists(os.path.join(ivfpq_idx_p, "_SUCCESS")):
         pq_codes_wide(corpus, pq_cents).join(
             ivf_cells(corpus, cents), "c_id"
@@ -515,7 +519,7 @@ def workloads(spark, d: str, scale: float, ops: list[str] | None = None):
     # 64 buckets; untimed once-per-snapshot build).  Buckets come from
     # the raw embeddings table, so rename to the (c_id, vec) serving
     # schema after assignment.
-    lsh_idx_p = f"/root/repo/.scratch/lsh_vec_idx_{tag}"
+    lsh_idx_p = f"{SCRATCH}/lsh_vec_idx_{tag}"
     if wanted("lsh_serve_pruned") and not os.path.exists(os.path.join(lsh_idx_p, "_SUCCESS")):
         hyperplane_lsh_buckets(
             emb.select("vec_id", "embedding"), dim=64, n_planes=6
@@ -541,8 +545,8 @@ def workloads(spark, d: str, scale: float, ops: list[str] | None = None):
             "cell",
             F.when(F.pmod("c_id", F.lit(10)) < 3, F.lit(0)).otherwise(F.col("cell")),
         )
-        hot_plain_p = f"/root/repo/.scratch/ivf_hot_plain_{tag}"
-        hot_split_p = f"/root/repo/.scratch/ivf_hot_split_{tag}"
+        hot_plain_p = f"{SCRATCH}/ivf_hot_plain_{tag}"
+        hot_split_p = f"{SCRATCH}/ivf_hot_split_{tag}"
         if not os.path.exists(os.path.join(hot_plain_p, "_SUCCESS")):
             hot_cells.join(corpus, "c_id").write.partitionBy("cell").mode(
                 "overwrite"

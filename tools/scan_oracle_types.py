@@ -18,10 +18,11 @@ Usage: python tools/scan_oracle_types.py [--sf /root/testdata/sf0.001] [--emit]
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 from collections import defaultdict
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 BAD_PREFIXES = ("HUGEINT", "UHUGEINT")
 NESTED_MARKERS = ("[]", "STRUCT", "MAP(")
@@ -100,7 +101,9 @@ def main() -> int:
         for name, cols in sorted(hugeint.items()):
             lines.append(f"    {name!r}: {tuple(cols)!r},")
         lines.append("}")
-        out = "/root/repo/mo_etl_spark/oracle_fixups.py"
+        from mo_etl_spark.session import ENGINE_ROOT
+
+        out = os.path.join(ENGINE_ROOT, "mo_etl_spark", "oracle_fixups.py")
         with open(out, "w") as f:
             f.write("\n".join(lines) + "\n")
         print(f"wrote {out} ({len(hugeint)} entries)")

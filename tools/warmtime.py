@@ -18,7 +18,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
@@ -52,7 +52,9 @@ def main() -> None:
 
     names = list(args.names)
     if args.top:
-        with open("/root/repo/BENCH_DETAIL.json") as f:
+        from mo_etl_spark.session import ENGINE_ROOT
+
+        with open(os.path.join(ENGINE_ROOT, "BENCH_DETAIL.json")) as f:
             det = json.load(f)["queries"]
         names += [k for k, _ in sorted(det.items(), key=lambda kv: -kv[1])[: args.top] if k not in names]
 
