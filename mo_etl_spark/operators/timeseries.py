@@ -17,24 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def spread_groups(df: DataFrame, key: str) -> DataFrame:
-    """Pin full parallelism for a PYTHON-COMPUTE-heavy grouped stage
-    (r11 optimization; guide §2.5 / §4): AQE's partition coalescing
-    sizes post-shuffle partitions by BYTES (advisory/minPartitionSize),
-    which is right for JVM operators but starves an applyInPandas /
-    pandas-window stage whose cost is per-row Python time — a ~3 MB
-    events shuffle coalesced to 3-5 partitions serializes an O(n)
-    Python walk onto a few cores (measured: 5 tasks carrying 12-16 s
-    of summed task time, wall ~4x the ideal).  An explicit keyed
-    repartition to the cluster's default parallelism is exempt from
-    AQE coalescing, keeps the per-key grouping contract identical,
-    and costs no extra exchange (HashPartitioning(key, N) satisfies
-    the grouped-map/window distribution requirement for any N).  On a
-    real cluster defaultParallelism is the executor-core total, so the
-    pin stays scale-adaptive."""
-    n = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n, F.col(key))
+from mo_etl_spark.operators.grouped import grouped_pandas
 
 
 def resample_ffill(
@@ -99,7 +82,7 @@ def ewma_halving(
 
     The state feedback makes this NON-window-expressible (each row
     needs the previous row's *output*), the same class as
-    sessionize_capped: an O(n) walk per key via applyInPandas — one
+    sessionize_capped: an O(n) walk per key via ``grouped_pandas`` — one
     key shuffle, Arrow both ways, Python touches each row once.
 
     Cross-engine float parity by construction: inputs are integers,
@@ -121,10 +104,9 @@ def ewma_halving(
         pdf["ewma"] = out
         return pdf[[key, id_col, "ewma"]]
 
-    return (
-        spread_groups(df.select(key, ts, id_col, value_col), key)
-        .groupBy(key)
-        .applyInPandas(walk, f"{key} long, {id_col} long, ewma double")
+    return grouped_pandas(
+        df.select(key, ts, id_col, value_col), key, walk,
+        f"{key} long, {id_col} long, ewma double",
     )
 
 
@@ -145,7 +127,7 @@ def holt_halving(
     capacity-planning smoother that plain EWMA (ewma_halving) can't
     provide because it damps any slope.  Same execution class:
     coupled state feedback is non-window-expressible, so it runs as an
-    O(n) applyInPandas walk per key (ONE key shuffle).
+    O(n) ``grouped_pandas`` walk per key (ONE key shuffle).
 
     Cross-engine float parity by construction (same discipline as
     ewma_halving): integer inputs, and each step evaluates the literal
@@ -169,12 +151,9 @@ def holt_halving(
         pdf["forecast"] = level + trend
         return pdf[[key, id_col, "level", "trend", "forecast"]]
 
-    return (
-        spread_groups(df.select(key, ts, id_col, value_col), key)
-        .groupBy(key)
-        .applyInPandas(
-            walk, f"{key} long, {id_col} long, level double, trend double, forecast double"
-        )
+    return grouped_pandas(
+        df.select(key, ts, id_col, value_col), key, walk,
+        f"{key} long, {id_col} long, level double, trend double, forecast double",
     )
 
 
@@ -190,7 +169,7 @@ def capped_running_balance(
     ``bal_t = clamp(bal_{t-1} + delta_t, 0, cap)`` starting from 0 —
     the inventory / token-bucket / leaky-rate-limiter recurrence.
     Saturation is state FEEDBACK (the clamp result feeds the next
-    step), so no window frame expresses it; same applyInPandas O(n)
+    step), so no window frame expresses it; same ``grouped_pandas`` O(n)
     walk per key as ewma_halving, ONE key shuffle.  Pure int64 — no
     float parity question at all.  Also emits how much each step lost
     to the clamp (overflow spill / starved demand)."""
@@ -211,10 +190,9 @@ def capped_running_balance(
         pdf["clipped"] = clipped
         return pdf[[key, id_col, "balance", "clipped"]]
 
-    return (
-        spread_groups(df.select(key, ts, id_col, delta_col), key)
-        .groupBy(key)
-        .applyInPandas(walk, f"{key} long, {id_col} long, balance long, clipped long")
+    return grouped_pandas(
+        df.select(key, ts, id_col, delta_col), key, walk,
+        f"{key} long, {id_col} long, balance long, clipped long",
     )
 
 

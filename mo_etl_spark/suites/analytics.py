@@ -1238,8 +1238,8 @@ def win_sessionize_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes this genuinely iterative — each row's session depends on the
     anchor chosen for the previous row, which plain window functions
     cannot express (lag+cumsum handles gap-only; the anchor feedback
-    loop does not decompose).  Engine path: Arrow-batched grouped-map
-    (applyInPandas) per user with an O(n) walk; oracle: a recursive
+    loop does not decompose).  Engine path: Arrow-batched grouped map
+    (``grouped_pandas``) per user with an O(n) walk; oracle: a recursive
     CTE stepping row-by-row per user.
 
     Scale: one shuffle on user_id; each group walks linearly in numpy.
@@ -1274,13 +1274,9 @@ def win_sessionize_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
         out["session_idx"] = sids
         return out
 
-    from mo_etl_spark.operators.timeseries import spread_groups
+    from mo_etl_spark.operators.grouped import grouped_pandas
 
-    # pin full parallelism for the Python-compute-bound walk (see
-    # spread_groups: AQE's bytes-based coalescing would serialize it)
-    return spread_groups(pts, "user_id").groupBy("user_id").applyInPandas(
-        walk, "event_id long, user_id long, session_idx int"
-    )
+    return grouped_pandas(pts, "user_id", walk, "event_id long, user_id long, session_idx int")
 
 
 # ---------------------------------------------------------------------------
@@ -1820,7 +1816,7 @@ def ts_ewma_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user EWMA (alpha=1/2) over event values — the smoothing
     stage monitoring/forecasting pipelines run; state feedback makes it
     non-window-expressible (operators/timeseries.ewma_halving: O(n)
-    applyInPandas walk, ONE key shuffle).  The DuckDB oracle replays
+    ``grouped_pandas`` walk, ONE key shuffle).  The DuckDB oracle replays
     the recurrence as a recursive CTE; both engines evaluate the
     literal (x + s)/2 double expression in the same order, so the
     sequences are bit-identical and the query hash-checks a genuinely
@@ -2696,8 +2692,8 @@ def ts_capped_running_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Saturating running balance per user (floor 0, cap 20000 cents;
     deltas = event value − 45.00): the inventory-level / token-bucket
     recurrence whose clamp feedback no window frame can express
-    (operators/timeseries.capped_running_balance — applyInPandas O(n)
-    walk, ONE key shuffle, pure int64).  The oracle replays the
+    (operators/timeseries.capped_running_balance — ``grouped_pandas``
+    O(n) walk, ONE key shuffle, pure int64).  The oracle replays the
     clamp recurrence as a recursive CTE; integer arithmetic means the
     hash match is exact by construction, completing the iterative
     family (EWMA float, Holt coupled-float, balance integer-clamp)."""

@@ -20,7 +20,7 @@ from mo_etl_spark.operators import text as X
 from mo_etl_spark.operators.multimodal import decode_batch, with_binary_payload
 from mo_etl_spark.registry import query
 from mo_etl_spark.session import prepare
-from mo_etl_spark.tables import cache_path, derived, load_table
+from mo_etl_spark.tables import cache_path, derived, load_table, table_rows
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -787,7 +787,10 @@ def llm_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("vec")
     )
     c = emb.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("vec"))
-    return S.topk_routed(q, c, k=5).select("q_id", "c_id", "cos_sim", "rnk")
+    # the corpus is the whole table: its footer row count routes the
+    # query without an eager checkpoint + count job
+    n = table_rows(sf_dir, "embeddings")
+    return S.topk_routed(q, c, k=5, n_rows=n).select("q_id", "c_id", "cos_sim", "rnk")
 
 
 @query(

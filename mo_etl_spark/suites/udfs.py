@@ -97,17 +97,17 @@ def _per_user_sequence(pdf: pd.DataFrame) -> pd.DataFrame:
     tags=("grouped_map", "applyInPandas"),
 )
 def udf_grouped_map_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """applyInPandas grouped-map (the ETL per-group transform shape) —
-    each user's events arrive as one pandas frame; output schema is
-    declared, shuffle is one hash partition by user_id."""
+    """Grouped map (the ETL per-group transform shape) — each user's
+    events arrive as one pandas frame; output schema is declared,
+    shuffle is one hash partition by user_id.  Runs through
+    ``grouped_pandas``: one Python call per Arrow batch, cut into
+    per-user frames, on a full-parallelism partitioning."""
     prepare(spark)
-    from mo_etl_spark.operators.timeseries import spread_groups
+    from mo_etl_spark.operators.grouped import grouped_pandas
 
-    events = load_table(spark, sf_dir, "events")
-    # pin full parallelism: AQE's bytes-based coalescing serializes
-    # this Python-compute-bound grouped map onto a few cores (see
-    # spread_groups — measured 5 tasks carrying 12-16 s summed)
-    return spread_groups(events, "user_id").groupBy("user_id").applyInPandas(
+    return grouped_pandas(
+        load_table(spark, sf_dir, "events"),
+        "user_id",
         _per_user_sequence,
         "event_id BIGINT, user_id BIGINT, seq BIGINT, purchases_so_far BIGINT",
     )
@@ -381,7 +381,7 @@ def udf_grouped_agg_over_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("ts", "event_id")
         .rowsBetween(-2, Window.currentRow)
     )
-    from mo_etl_spark.operators.timeseries import spread_groups
+    from mo_etl_spark.operators.grouped import spread_groups
 
     # pin full parallelism for the pandas-window stage (see
     # spread_groups): the per-frame Arrow slicing is Python-cost-bound

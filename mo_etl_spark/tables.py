@@ -7,6 +7,7 @@ views here.
 
 from __future__ import annotations
 
+import glob
 import os
 from typing import Callable
 
@@ -82,6 +83,17 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     _PLAN_MEMO[key] = (mtime, df)
     return df
+
+
+def table_rows(sf_dir: str, name: str) -> int:
+    """Row count of the table ``load_table(spark, sf_dir, name)`` scans,
+    summed from its parquet footers: no Spark job, for callers that
+    size a plan by its input (e.g. ``topk_routed(n_rows=...)``)."""
+    import pyarrow.parquet as pq
+
+    path = f"{sf_dir}/{name}.parquet"
+    files = [path] if os.path.isfile(path) else glob.glob(f"{path}/**/*.parquet", recursive=True)
+    return sum(pq.read_metadata(f).num_rows for f in files)
 
 
 def cache_path(sf_dir: str, name: str) -> str:

@@ -1130,3 +1130,47 @@ def test_txn_group_ann_serve_excludes_uncommitted_batch(spark, sf001):
     for ln in scans:
         pf = ln.split("PartitionFilters")[1]
         assert "cell#" in pf and ("INSET" in pf or " IN " in pf), ln
+
+
+_GROUPED_MAP_QUERIES = (
+    "udf_grouped_map_sequence",
+    "win_sessionize_capped",
+    "ts_ewma_per_user",
+    "ts_holt_trend_per_user",
+    "ts_capped_running_balance",
+)
+
+
+@pytest.mark.parametrize("name", _GROUPED_MAP_QUERIES)
+def test_grouped_map_queries_run_one_map_in_pandas(spark, sf001, name):
+    """The engine's grouped maps go through ``grouped_pandas``: one
+    ``MapInPandas`` (Python once per Arrow batch) behind ONE keyed
+    exchange, never the per-group ``FlatMapGroupsInPandas``."""
+    import __spark_entry__ as entry
+
+    plan = plan_of(entry.queries()[name](spark, sf001))
+    assert "MapInPandas" in plan and "FlatMapGroupsInPandas" not in plan, plan
+    exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
+    assert len(exchanges) == 1, plan
+    assert "hashpartitioning(user_id#" in exchanges[0], exchanges
+
+
+def test_sim_topk_build_runs_no_job(spark, sf001):
+    """``llm_sim_topk`` routes by the table's footer row count
+    (``tables.table_rows``), so building its DataFrame starts no Spark
+    job: no eager checkpoint and count of the corpus."""
+    from mo_etl_spark.suites.llm import llm_sim_topk
+    from mo_etl_spark.tables import load_table
+
+    # a table's first scan infers its schema with a footer job of its own
+    load_table(spark, sf001, "embeddings")
+    sc = spark.sparkContext
+    # the tracker below lists jobs outside any job group
+    assert sc.getLocalProperty("spark.jobGroup.id") is None
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = set(tracker.getJobIdsForGroup())
+    llm_sim_topk(spark, sf001)
+    bus.waitUntilEmpty()
+    assert set(tracker.getJobIdsForGroup()) - before == set()

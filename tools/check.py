@@ -11,6 +11,10 @@ rendered as float64 fails here exactly as it fails the driver
 Float mismatches are still *reported* with max-abs-diff to speed
 diagnosis, but they are failures — no tolerance.
 
+Before the timed loop the first listed query runs once untimed, so
+session and JIT warm-up land in the summary's ``warmup_s`` instead of
+that query's ``sec``.
+
 Usage:
     python tools/check.py [--sf /root/testdata/sf0.01] [name ...]
 """
@@ -151,6 +155,16 @@ def main() -> int:
     oracles = entrymod.oracle_sql()
     names = args.names or list(qs)
 
+    # one untimed run of the first query takes session and JIT warm-up
+    # out of the per-query `sec` of whichever query happens to run first
+    t0 = time.time()
+    if names:
+        try:
+            qs[names[0]](spark, args.sf).toPandas()
+        except Exception:
+            pass  # the timed loop reports it
+    warmup_s = round(time.time() - t0, 2)
+
     n_pass = n_fail = n_rows_only = 0
     failures = []
     results: dict[str, dict] = {}
@@ -228,7 +242,10 @@ def main() -> int:
                 "sec": round(time.time() - t0, 2),
             }
 
-    print(f"\n{n_pass} pass, {n_rows_only} rows-only, {n_fail} fail of {len(names)}")
+    print(
+        f"\n{n_pass} pass, {n_rows_only} rows-only, {n_fail} fail of {len(names)}"
+        f" (warm-up {warmup_s}s)"
+    )
     if failures:
         print("failures:", " ".join(failures))
     if args.json:
@@ -243,6 +260,7 @@ def main() -> int:
                     "n_fail": n_fail,
                     "n_rows_only": n_rows_only,
                     "n_total": len(names),
+                    "warmup_s": warmup_s,
                     "failures": failures,
                     "queries": results,
                 },
