@@ -26,7 +26,7 @@ from collections.abc import Callable, Iterable, Iterator, Sequence
 from functools import reduce
 from typing import NamedTuple
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -866,49 +866,75 @@ def diff_batched(
     yields it null, which would report every row as both insert and
     delete; ADVICE r8 medium)."""
     lg = read_manifest_log(root)
+    _gate_schema_ops(
+        lg.get(gen_from),
+        lg.get(gen_to),
+        f"change feed window ({gen_from}, {gen_to}] on {root!r}",
+        "consumer",
+    )
+    return _keyed_diff(
+        read_batched_at(spark, root, gen_from, schema, partitioned=partitioned),
+        read_batched_at(spark, root, gen_to, schema, partitioned=partitioned),
+        key_cols,
+        compare_cols,
+    )
 
-    def _nops(g: int) -> int:
-        e = (lg.get(g) or {}).get("extra")
+
+def _gate_schema_ops(
+    rec_from: dict | None, rec_to: dict | None, window: str, consumer: str
+) -> None:
+    """THE schema-ops gate of the snapshot diffs (diff_batched; the
+    fallback of apply_group_feed_batched): the two endpoint manifest
+    records must have applied the same number of schema ops.  A window
+    that crosses a rename/drop (r11) cannot be read by name with ONE
+    explicit schema — the old end would yield nulls for renamed
+    columns and the keyed diff would silently report every row as
+    changed — so it raises the NAMED SchemaEvolved instead."""
+
+    def n_ops(rec: dict | None) -> int:
+        e = (rec or {}).get("extra")
         return len(e.get("schema_ops") or []) if isinstance(e, dict) else 0
 
-    if _nops(gen_from) != _nops(gen_to):
-        # the window crosses a rename/drop (r11): ONE explicit schema
-        # cannot read both endpoints by name — the old end would yield
-        # nulls for renamed columns and the keyed diff would silently
-        # report every row as changed
+    if n_ops(rec_from) != n_ops(rec_to):
         raise SchemaEvolved(
-            f"change feed window ({gen_from}, {gen_to}] on {root!r} "
-            "crosses a schema-evolution generation — re-seed the "
-            "consumer from the evolved snapshot"
+            f"{window} crosses a schema-evolution generation — re-seed "
+            f"the {consumer} from the evolved snapshot"
         )
-    a = read_batched_at(spark, root, gen_from, schema, partitioned=partitioned)
-    b = read_batched_at(spark, root, gen_to, schema, partitioned=partitioned)
+
+
+def _keyed_diff(
+    a: DataFrame,
+    b: DataFrame,
+    key_cols: Sequence[str],
+    compare_cols: Sequence[str] | None = None,
+) -> DataFrame:
+    """THE keyed snapshot diff from ``a`` to ``b``: rows whose key only
+    ``b`` has are inserts, only ``a`` deletes, and with
+    ``compare_cols`` keys in both whose named columns differ
+    (null-safe) emit delete (old row) + insert (new row).  Unions allow
+    missing columns: across an additive schema change the older
+    snapshot lacks the new column, which reads back null."""
     keys = [str(k) for k in key_cols]
-    ins = b.join(a.select(*keys), keys, "left_anti").withColumn(
-        "_change", F.lit("insert")
+
+    def tag(df: DataFrame, other: DataFrame, how: str, change: str) -> DataFrame:
+        return df.join(other, keys, how).withColumn("_change", F.lit(change))
+
+    out = tag(b, a.select(*keys), "left_anti", "insert").unionByName(
+        tag(a, b.select(*keys), "left_anti", "delete"), allowMissingColumns=True
     )
-    dels = a.join(b.select(*keys), keys, "left_anti").withColumn(
-        "_change", F.lit("delete")
-    )
-    out = ins.unionByName(dels)
     if compare_cols:
         cc = [str(c) for c in compare_cols]
         av = a.select(*keys, *[F.col(c).alias(f"_a_{c}") for c in cc])
         bv = b.select(*keys, *[F.col(c).alias(f"_b_{c}") for c in cc])
-        same = None
-        for c in cc:
-            eq = F.col(f"_a_{c}").eqNullSafe(F.col(f"_b_{c}"))
-            same = eq if same is None else (same & eq)
-        changed = av.join(bv, keys, "inner").where(~same).select(*keys)
-        out = out.unionByName(
-            a.join(changed, keys, "left_semi").withColumn(
-                "_change", F.lit("delete")
-            )
-        ).unionByName(
-            b.join(changed, keys, "left_semi").withColumn(
-                "_change", F.lit("insert")
-            )
+        same = reduce(
+            lambda x, y: x & y,
+            [F.col(f"_a_{c}").eqNullSafe(F.col(f"_b_{c}")) for c in cc],
         )
+        changed = av.join(bv, keys, "inner").where(~same).select(*keys)
+        for df, change in ((a, "delete"), (b, "insert")):
+            out = out.unionByName(
+                tag(df, changed, "left_semi", change), allowMissingColumns=True
+            )
     return out
 
 
@@ -931,11 +957,11 @@ def diff_batched_adjacent(
     r11 (VERDICT r10 item #4): a window may now also contain TRANSFORM
     generations that committed a materialized delta
     (``compact_batched(change_feed=True)`` — the Delta MERGE-CDF
-    shape): per-generation events compose via _diff_adjacent_mixed,
-    still zero snapshot scans.  Key-only semantics are preserved
-    exactly: an in-window payload rewrite of a pre-existing key (a
-    rebucket moving its bucket column) emits NOTHING, matching
-    diff_batched without compare_cols.
+    shape): per-generation events compose via _feed_walk, still zero
+    snapshot scans.  Key-only semantics are preserved exactly: an
+    in-window payload rewrite of a pre-existing key (a rebucket moving
+    its bucket column) emits NOTHING, matching diff_batched without
+    compare_cols.
 
     Returns None — caller falls back to the snapshot diff — whenever
     reconstruction is unsound or the change files are gone:
@@ -959,119 +985,109 @@ def diff_batched_adjacent(
     log = read_manifest_log(root)
     if gen_from not in log or gen_to not in log:
         return None
-    window = list(range(gen_from + 1, gen_to + 1))
-    if any(
-        g not in log
-        or not (log[g].get("plain") or log[g].get("change"))
-        for g in window
-    ):
-        return None
-    if all(log[g].get("plain") for g in window):
-        cons_from = set(log[gen_from]["consumed"])
-        cons_to = set(log[gen_to]["consumed"])
-        batch_names = sorted(
-            n
-            for n in cons_to - cons_from
-            if n.startswith("b") and n[1:].isdigit()
-        )
-        tombs_from = set(log[gen_from].get("tombs") or {})
-        tombs_to = set(log[gen_to].get("tombs") or {})
-        tomb_files = sorted(
-            os.path.join(root, _TOMBSTONES, n) for n in tombs_to - tombs_from
-        )
-        return _assemble_change_feed(
-            spark, root, batch_names, tomb_files, key_cols, schema
-        )
-    # MIXED window (r11, VERDICT r10 item #4): transform generations
-    # that committed a change file compose with plain generations via
-    # per-generation events — still zero snapshot scans
-    return _diff_adjacent_mixed(
-        spark, root, log, gen_from, gen_to, key_cols, schema
-    )
+    return _feed_walk(spark, root, log, gen_from, gen_to, key_cols, schema)
 
 
-def _diff_adjacent_mixed(
+def _feed_walk(
     spark: SparkSession,
     root: str,
-    log: dict[int, dict],
-    gen_from: int,
-    gen_to: int,
+    mlog: dict[int, dict],
+    g_from: int,
+    g_to: int,
     key_cols: Sequence[str],
     schema: str | None,
-    presence_keys: DataFrame | None = None,
+    txn_from: int = -1,
+    tail: Sequence[str] = (),
 ) -> DataFrame | None:
-    """Per-generation event collection for an adjacent-diff window
-    containing CHANGE-FILE transform generations (r11): plain
-    generations contribute their consumed batch dirs (inserts, ord
-    g-0.25) and folded tombstone files (deletes, ord g); change
-    generations contribute their materialized delta (deletes at
-    g-0.25, inserts at g — delete-then-insert inside one generation is
-    a payload update, which resolves to finally-present).  Returns
-    None whenever any needed artifact is gone or keyed differently —
-    the caller falls back to the snapshot diff."""
+    """THE change-file feed of one table across generations ``(g_from,
+    g_to]`` of its manifest log ``mlog`` (diff_batched_adjacent, and
+    diff_group_adjacent for one member), walked generation by
+    generation: a PLAIN generation contributes the batch dirs it
+    consumed (inserts, ord ``g-0.25``) and the tombstone files it
+    folded (deletes, ord ``g``); a TRANSFORM generation its change file
+    (deletes at ``g-0.25``, inserts at ``g`` — delete-then-insert
+    inside one generation is a payload update, which resolves to
+    finally-present).  _resolve_change_events composes the events.
+
+    Two group corrections, both empty for a single table: batch ids
+    at or below ``txn_from`` were live in the window's starting view
+    already, so a plain fold of one changes nothing, and a transform
+    fold of one re-emits its rows in the change file — its keys are
+    marked present-at-start; ``tail`` names window batch dirs no
+    generation up to ``g_to`` consumed, direct inserts ordered after
+    every generation event.
+
+    The whole window is checked on disk before anything is read:
+    None — the caller falls back to the snapshot diff — when a window
+    generation is missing from ``mlog`` (``g_from`` itself may be
+    missing only as a pre-fold member's gen 0) or neither plain nor
+    carrying a change file, or a needed batch dir, tombstone file or
+    change file is gone or keyed differently."""
     keys = [str(k) for k in key_cols]
-    ins_events: list[tuple[DataFrame, float]] = []
-    del_events: list[tuple[DataFrame, float]] = []
-    for g in range(gen_from + 1, gen_to + 1):
-        rec, prev = log[g], log.get(g - 1)
-        if prev is None:
+    start: dict = {"consumed": {}, "tombs": {}}
+    batches: list[tuple[str, float]] = []  # insert events: (dir, ord)
+    present: list[str] = []  # dirs whose keys were live at window start
+    tombs: dict[str, float] = {}  # folded tombstone file -> ord
+    changes: list[tuple[str, int]] = []  # (change dir, gen)
+    for g in range(g_from + 1, g_to + 1):
+        rec = mlog.get(g)
+        prev = mlog.get(g - 1, start if g - 1 == g_from else None)
+        if rec is None or prev is None:
             return None  # per-generation attribution needs g-1's entry
+        gained = [
+            (n, int(n[1:]) <= txn_from)
+            for n in sorted(set(rec["consumed"]) - set(prev["consumed"]))
+            if n.startswith("b") and n[1:].isdigit()
+        ]
         if rec.get("plain"):
-            bnames = sorted(
-                n
-                for n in set(rec["consumed"]) - set(prev["consumed"])
-                if n.startswith("b") and n[1:].isdigit()
+            batches += [(n, g - 0.25) for n, pre in gained if not pre]
+            for n in set(rec.get("tombs") or {}) - set(prev.get("tombs") or {}):
+                tombs[n] = float(g)
+        elif rec.get("change"):
+            present += [n for n, pre in gained if pre]
+            changes.append((os.path.join(root, _CHANGES, str(rec["change"])), g))
+        else:
+            return None  # an opted-out transform, a rollback, a pre-r10 fold
+    batches += [(n, g_to + 0.75) for n in tail]
+    tfiles = sorted(os.path.join(root, _TOMBSTONES, n) for n in tombs)
+    needed = [os.path.join(root, n) for n in [*(n for n, _ in batches), *present]]
+    if not all(os.path.exists(p) for p in needed + tfiles):
+        return None  # a change artifact was vacuumed: fall back
+
+    def rows(n: str) -> list[DataFrame]:
+        return [
+            _read_dir(spark, e, schema, True)
+            for e in _entries([os.path.join(root, n)])
+        ]
+
+    ins = [(df, o) for n, o in batches for df in rows(n)]
+    dels: list[DataFrame] = []
+    for cdir, g in changes:
+        if not _entries([cdir]):
+            if not os.path.exists(os.path.join(cdir, "_SUCCESS")):
+                return None  # vacuumed, or never completed
+            continue  # a complete, empty delta: no events
+        cf = spark.read.parquet(cdir)
+        if not set(keys) <= set(cf.columns):
+            return None
+        ins.append((cf.where(F.col("_change") == "insert").drop("_change"), g))
+        dels.append(
+            cf.where(F.col("_change") == "delete").select(
+                *keys, F.lit(g - 0.25).alias("_ord")
             )
-            for n in bnames:
-                p = os.path.join(root, n)
-                if not os.path.isdir(p):
-                    return None  # change file vacuumed: fall back
-                ins_events += [
-                    (_read_dir(spark, e, schema, True), g - 0.25)
-                    for e in _entries([p])
-                ]
-            tnames = set(rec.get("tombs") or {}) - set(
-                prev.get("tombs") or {}
-            )
-            tfiles = sorted(
-                os.path.join(root, _TOMBSTONES, n) for n in tnames
-            )
-            for fp in tfiles:
-                if not os.path.exists(fp):
-                    return None
-            if tfiles:
-                tk = spark.read.parquet(*tfiles)
-                if not set(keys) <= set(tk.columns):
-                    return None
-                del_events.append((tk.select(*keys).distinct(), float(g)))
-        else:  # change-file transform generation
-            cdir = os.path.join(root, _CHANGES, str(rec["change"]))
-            if not os.path.isdir(cdir):
-                return None
-            if not _entries([cdir]):
-                if not os.path.exists(os.path.join(cdir, "_SUCCESS")):
-                    return None
-                continue  # complete, empty delta: no events
-            cf = spark.read.parquet(cdir)
-            if not set(keys) <= set(cf.columns):
-                return None
-            del_events.append(
-                (
-                    cf.where(F.col("_change") == "delete")
-                    .select(*keys)
-                    .distinct(),
-                    g - 0.25,
-                )
-            )
-            ins_events.append(
-                (
-                    cf.where(F.col("_change") == "insert").drop("_change"),
-                    float(g),
-                )
-            )
-    return _resolve_change_events(
-        spark, ins_events, del_events, keys, schema, presence_keys
-    )
+        )
+    if tfiles:
+        # ONE read of every window tombstone file; each row's ord is
+        # that of the generation that folded its file
+        tk = spark.read.parquet(*tfiles)
+        if not set(keys) <= set(tk.columns):
+            return None  # tombstones keyed differently
+        ords = F.create_map(*[F.lit(x) for n, o in tombs.items() for x in (n, o)])
+        dels.append(
+            tk.select(*keys, ords[F.col("_metadata.file_name")].alias("_ord"))
+        )
+    presence = [df.select(*keys) for n in present for df in rows(n)]
+    return _resolve_change_events(spark, ins, dels, keys, schema, presence)
 
 
 def _align_to(df: DataFrame, fields) -> DataFrame:
@@ -1092,18 +1108,17 @@ def _align_to(df: DataFrame, fields) -> DataFrame:
 
 def _resolve_change_events(
     spark: SparkSession,
-    ins_events: "list[tuple[DataFrame, float]]",
-    del_events: "list[tuple[DataFrame, float]]",
+    ins: Sequence[tuple[DataFrame, float]],
+    dels: Sequence[DataFrame],
     key_cols: Sequence[str],
     schema: str | None,
-    presence_keys: DataFrame | None = None,
+    presence: Sequence[DataFrame] = (),
 ) -> DataFrame | None:
     """Compose a window of per-generation change events into ONE keyed
     feed with exactly ``diff_batched``'s key-only semantics (r11 —
     what makes the change-file fast path sound across TRANSFORM
-    generations): each event is (rows, ord) — batch-dir inserts and
-    folded-tombstone deletes for plain generations, change-file
-    deletes/inserts for transform generations — and per key the
+    generations): insert events are (full rows, ord) pairs, delete
+    events frames of keys with their ord in ``_ord``, and per key the
     ordered history resolves to
 
     - first event insert, finally present  -> INSERT (last payload)
@@ -1119,159 +1134,86 @@ def _resolve_change_events(
     UPDATE (delete@g-eps then insert@g: finally present) from a plain
     fold that consumed a batch and folded its retraction in the same
     pass (insert@g-eps then tomb delete@g: finally absent) — callers
-    assign the fractional ords accordingly.  ``presence_keys`` marks
-    keys KNOWN present at window start even though their first event
-    is an insert (the group overlay case: a pre-window live batch
-    consumed by an in-window transform re-appears in its change file);
-    such keys follow the pre-existing rules instead."""
+    assign the fractional ords accordingly.  ``presence`` holds keys
+    KNOWN present at window start even though their first event is an
+    insert (the group overlay case: a pre-window live batch consumed
+    by an in-window transform re-appears in its change file); such
+    keys follow the pre-existing rules instead.
+
+    The feed's columns are ``schema``'s, or without one the union of
+    the insert events' columns (a column added mid-window is kept,
+    null where an event lacks it); None when there is neither."""
     keys = [str(k) for k in key_cols]
-    if not ins_events and schema is None:
+    if not ins and schema is None:
         return None  # no schema and nothing to infer one from
+
+    def union(dfs: Sequence[DataFrame]) -> DataFrame:
+        return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), dfs)
+
+    ins_all = (
+        union([df.withColumn("_ord", F.lit(float(o))) for df, o in ins])
+        if ins
+        else spark.createDataFrame([], schema).withColumn("_ord", F.lit(0.0))
+    )
     ref_fields = (
         spark.createDataFrame([], schema).schema.fields
         if schema is not None
-        else ins_events[0][0].schema.fields
+        else [f for f in ins_all.schema.fields if f.name != "_ord"]
     )
-    empty = spark.createDataFrame(
-        [], spark.createDataFrame([], schema).schema
-    ) if schema is not None else ins_events[0][0].limit(0)
-    ins_all = (
-        reduce(
-            lambda a, b: a.unionByName(b),
-            [
-                _align_to(df, ref_fields).withColumn("_ord", F.lit(float(o)))
-                for df, o in ins_events
-            ],
-        )
-        if ins_events
-        else _align_to(empty, ref_fields).withColumn("_ord", F.lit(0.0))
+    if not dels and not presence and len({o for _, o in ins}) <= 1:
+        # one insert event and nothing else (a group window of one
+        # trigger's batch): every row is an insert, no keyed pass
+        return _align_to(ins_all, ref_fields).withColumn("_change", F.lit("insert"))
+    # ONE pass over every event row, partitioned by key: insert rows
+    # carry their payload, delete rows (kind "d") and present-at-start
+    # rows (kind "p", no ord) only the key
+    no_ord = F.lit(None).cast("double").alias("_ord")
+    ev = union(
+        [
+            _align_to(ins_all, [*ref_fields, ins_all.schema["_ord"]]).withColumn(
+                "_ev", F.lit("i")
+            ),
+            *[d.withColumn("_ev", F.lit("d")) for d in dels],
+            *[p.select(*keys, no_ord, F.lit("p").alias("_ev")) for p in presence],
+        ]
     )
-    del_all = (
-        reduce(
-            lambda a, b: a.unionByName(b),
-            [
-                df.select(
-                    *[F.col(k) for k in keys], F.lit(float(o)).alias("_ord")
-                )
-                for df, o in del_events
-            ],
-        )
-        if del_events
-        else ins_all.select(*keys, "_ord").limit(0)
-    )
+    w = Window.partitionBy(*keys)
+
+    def over(fn: Callable[[Column], Column], kind: str) -> Column:
+        return fn(F.when(F.col("_ev") == kind, F.col("_ord"))).over(w)
+
     INF = float("inf")
-    ins_agg = ins_all.groupBy(*keys).agg(
-        F.min("_ord").alias("_min_i"), F.max("_ord").alias("_max_i")
+    # a presence-only key with NO window events is a key the transform
+    # DROPPED entirely (a pre-window live batch consumed by the fold
+    # while its tombstone was folded in the same pass — absent from
+    # BOTH bases, so the change file never mentions it): present at
+    # start, never after, so it emits DELETE
+    start = (
+        F.coalesce(over(F.min, "d"), F.lit(INF))
+        < F.coalesce(over(F.min, "i"), F.lit(INF))
+    ) | F.max(F.col("_ev") == "p").over(w)
+    final = F.coalesce(over(F.max, "i"), F.lit(-INF)) > F.coalesce(
+        over(F.max, "d"), F.lit(-INF)
     )
-    del_agg = del_all.groupBy(*keys).agg(
-        F.min("_ord").alias("_min_d"), F.max("_ord").alias("_max_d")
+    # ALL rows of the key's LAST insert event — a key may own several
+    # rows (the band index holds one row per (id, band) under a
+    # single-column id key), and diff_batched emits every one; a
+    # single-survivor pick would silently drop the rest.  Rows within
+    # one event share its ord.  A deleted key emits ONE key-level row
+    # (its first non-insert row).
+    ev = ev.select(
+        "*",
+        start.alias("_start"),
+        final.alias("_final"),
+        over(F.max, "i").alias("_last"),
+        F.row_number().over(w.orderBy(F.col("_ev") == "i", "_ord")).alias("_n"),
     )
-    st = ins_agg.join(del_agg, keys, "full_outer")
-    if presence_keys is not None:
-        # FULL outer, not left: a present-at-start key with NO window
-        # events is a key the transform DROPPED entirely (a pre-window
-        # live batch consumed by the fold while its tombstone was
-        # folded in the same pass — absent from BOTH bases, so the
-        # change file never mentions it).  It must emit DELETE; a left
-        # join would silently drop it from the feed.
-        st = st.join(
-            presence_keys.select(*keys)
-            .distinct()
-            .withColumn("_pre", F.lit(True)),
-            keys,
-            "full_outer",
-        )
-    else:
-        st = st.withColumn("_pre", F.lit(None).cast("boolean"))
-    present_start = (
-        F.coalesce(F.col("_min_d"), F.lit(INF))
-        < F.coalesce(F.col("_min_i"), F.lit(INF))
-    ) | F.coalesce(F.col("_pre"), F.lit(False))
-    final_present = F.coalesce(F.col("_max_i"), F.lit(-INF)) > F.coalesce(
-        F.col("_max_d"), F.lit(-INF)
-    )
-    ins_keys = st.where(~present_start & final_present).select(
-        *keys, "_max_i"
-    )
-    del_keys = st.where(present_start & ~final_present).select(*keys)
-    # ALL rows of the key's LAST contributing event — a key may own
-    # several rows (the band index holds one row per (id, band) under
-    # a single-column id key), and diff_batched emits every one; a
-    # row_number()-style single-survivor pick would silently drop the
-    # rest.  Rows within one event share its ord, so the max-ord
-    # equijoin keeps exactly the winning event's row set.
-    out = (
-        ins_all.join(ins_keys, keys)
-        .where(F.col("_ord") == F.col("_max_i"))
-        .drop("_ord", "_max_i")
-        .withColumn("_change", F.lit("insert"))
-    )
-    dels = del_keys
-    for f in ref_fields:
-        if f.name not in keys:
-            dels = dels.withColumn(f.name, F.lit(None).cast(f.dataType))
-    return out.unionByName(
-        dels.select(*[f.name for f in ref_fields]).withColumn(
-            "_change", F.lit("delete")
-        )
-    )
-
-
-def _assemble_change_feed(
-    spark: SparkSession,
-    root: str,
-    batch_names: Sequence[str],
-    tomb_files: Sequence[str],
-    key_cols: Sequence[str],
-    schema: str | None,
-) -> DataFrame | None:
-    """Shared change-file feed assembly (diff_batched_adjacent /
-    diff_group_adjacent): inserts = the named batch dirs minus window
-    tombstone keys, deletes = window tombstone keys minus window
-    inserts (key-level, other columns null).  None when a change file
-    is gone or the tombstones aren't keyed on ``key_cols``."""
-    keys = [str(k) for k in key_cols]
-    paths = [os.path.join(root, n) for n in batch_names]
-    if not all(os.path.isdir(p) for p in paths):
-        return None  # change file vacuumed: fall back
-    for fp in tomb_files:
-        if not os.path.exists(fp):
-            return None
-    entries = _entries(paths)
-    if not entries and schema is None:
-        return None  # no schema, no insert files to infer one from
-    ins_raw = _union(
-        spark,
-        lambda e: _read_dir(spark, e, schema, True),
-        entries,
-        schema,
-        pack=False,
-    )
-    tomb_keys: DataFrame | None = None
-    if tomb_files:
-        tk = spark.read.parquet(*list(tomb_files))
-        if not set(keys) <= set(tk.columns):
-            return None  # tombstones keyed differently: fall back
-        tomb_keys = tk.select(*keys).distinct()
-    ins = ins_raw
-    if tomb_keys is not None:
-        ins = ins.join(tomb_keys, keys, "left_anti")
-    out = ins.withColumn("_change", F.lit("insert"))
-    if tomb_keys is not None:
-        dels = tomb_keys.join(
-            ins_raw.select(*keys).distinct(), keys, "left_anti"
-        )
-        for f in ins_raw.schema.fields:
-            if f.name not in keys:
-                dels = dels.withColumn(
-                    f.name, F.lit(None).cast(f.dataType)
-                )
-        out = out.unionByName(
-            dels.select(*ins_raw.columns).withColumn(
-                "_change", F.lit("delete")
-            )
-        )
-    return out
+    is_ins, start, final = F.col("_ev") == "i", F.col("_start"), F.col("_final")
+    out = ev.where(
+        F.when(is_ins, ~start & final & (F.col("_ord") == F.col("_last")))
+        .otherwise(start & ~final & (F.col("_n") == 1))
+    ).withColumn("_change", F.when(is_ins, "insert").otherwise("delete"))
+    return _align_to(out, [*ref_fields, out.schema["_change"]])
 
 
 def diff_group_adjacent(
@@ -1292,7 +1234,10 @@ def diff_group_adjacent(
     each member at one txn pair advances a multi-MV consumer of the
     whole group (e.g. a serving tier mirroring the dedup trio) from
     ONE consistent vector — the group twin of diff_batched_adjacent,
-    delta-proportional for the same reason.
+    delta-proportional for the same reason: the same per-generation
+    walk (_feed_walk) over the member's generations recorded at the
+    two txns, with the pre-window live batches and the window batches
+    still unconsumed at ``txn_to`` as its group corrections.
 
     Returns None (fall back to per-member snapshot diffs between
     read_group_at views) when unsound: either txn missing from the
@@ -1311,29 +1256,15 @@ def diff_group_adjacent(
         return None
     root = m_to["root"]
     g_from, g_to = int(m_from["gen"]), int(m_to["gen"])
-    mlog = read_manifest_log(root) if os.path.isdir(root) else {}
-    window = list(range(g_from + 1, g_to + 1))
-    for g in window:
-        if g not in mlog or not (
-            mlog[g].get("plain") or mlog[g].get("change")
-        ):
-            return None
+    mlog = read_manifest_log(root)
 
-    def _bid(n: str) -> bool:
-        return n.startswith("b") and n[1:].isdigit()
+    def inwin(n: str) -> bool:
+        return n.startswith("b") and n[1:].isdigit() and txn_from < int(n[1:]) <= txn_to
 
-    def _inwin(n: str) -> bool:
-        return _bid(n) and txn_from < int(n[1:]) <= txn_to
+    def consumed(rec: dict | None) -> set[str]:
+        return set((rec or {}).get("consumed") or {})
 
-    cons_from = (
-        set(mlog[g_from]["consumed"]) if g_from in mlog else set()
-    )
-    cons_to = set(mlog[g_to]["consumed"]) if g_to in mlog else set()
-    batch_names = sorted(
-        d
-        for d in (os.listdir(root) if os.path.isdir(root) else [])
-        if _inwin(d)
-    )
+    on_disk = {d for d in (os.listdir(root) if os.path.isdir(root) else []) if inwin(d)}
     # every batch id committed in the window must still be on disk —
     # one consumed-then-vacuumed dir makes the reconstruction silently
     # lossy.  Verify against the LIVE manifest's consumed set, not just
@@ -1345,126 +1276,14 @@ def diff_group_adjacent(
     # consumed map is a superset of every generation's (names are
     # carried forever), so one check covers both vacuum paths;
     # _group_entries_at applies the same discipline for snapshot reads.
-    live_man = _read_manifest(root) if os.path.isdir(root) else None
-    cons_later = cons_to | (set(live_man["consumed"]) if live_man else set())
-    for n in cons_later - cons_from:
-        if _inwin(n) and n not in batch_names:
-            return None  # consumed in window and already vacuumed
-    if all(mlog[g].get("plain") for g in window):
-        tombs_from = (
-            set(mlog[g_from].get("tombs") or {})
-            if g_from in mlog
-            else set()
-        )
-        tombs_to = (
-            set(mlog[g_to].get("tombs") or {}) if g_to in mlog else set()
-        )
-        tomb_files = sorted(
-            os.path.join(root, _TOMBSTONES, n) for n in tombs_to - tombs_from
-        )
-        return _assemble_change_feed(
-            spark, root, batch_names, tomb_files, key_cols, schema
-        )
-    # MIXED window (r11, VERDICT r10 item #4): transform generations
-    # with change files compose per-generation, with two group-only
-    # corrections — (a) pre-window LIVE batches a window transform
-    # consumed re-appear in its change file as inserts although their
-    # rows were already visible in the txn_from view: their keys are
-    # marked present-at-start so the resolution treats them as
-    # pre-existing; (b) window batches still unconsumed at g_to are
-    # direct inserts ordered after every generation event.
-    keys = [str(k) for k in key_cols]
-    ins_events: list[tuple[DataFrame, float]] = []
-    del_events: list[tuple[DataFrame, float]] = []
-    presence_parts: list[DataFrame] = []
-    covered: set[str] = set()
-
-    def _rd_batches(p: str) -> list[DataFrame]:
-        return [_read_dir(spark, e, schema, True) for e in _entries([p])]
-
-    for g in window:
-        rec = mlog[g]
-        prev = mlog.get(g - 1)
-        if prev is not None:
-            prev_cons = set(prev["consumed"])
-        elif g - 1 == g_from:
-            prev_cons = cons_from  # pre-fold member: gen 0, no entry
-        else:
-            return None
-        gained = {
-            n for n in set(rec["consumed"]) - prev_cons if _bid(n)
-        }
-        if rec.get("plain"):
-            for n in sorted(gained):
-                if not _inwin(n):
-                    continue  # pre-window batch folded: no view change
-                covered.add(n)
-                p = os.path.join(root, n)
-                if not os.path.isdir(p):
-                    return None
-                ins_events += [(df, g - 0.25) for df in _rd_batches(p)]
-            tnames = set(rec.get("tombs") or {}) - set(
-                (prev or {}).get("tombs") or {}
-            )
-            tfiles = sorted(
-                os.path.join(root, _TOMBSTONES, n) for n in tnames
-            )
-            for fp in tfiles:
-                if not os.path.exists(fp):
-                    return None
-            if tfiles:
-                tk = spark.read.parquet(*tfiles)
-                if not set(keys) <= set(tk.columns):
-                    return None
-                del_events.append((tk.select(*keys).distinct(), float(g)))
-        else:  # change-file transform generation
-            for n in sorted(gained):
-                p = os.path.join(root, n)
-                if int(n[1:]) <= txn_from:
-                    # pre-window live batch: its keys were visible at
-                    # txn_from — needed for the presence correction
-                    if not os.path.isdir(p):
-                        return None
-                    presence_parts += [df.select(*keys) for df in _rd_batches(p)]
-                elif _inwin(n):
-                    covered.add(n)  # the cf carries its rows
-            cdir = os.path.join(root, _CHANGES, str(rec["change"]))
-            if not os.path.isdir(cdir):
-                return None
-            if not _entries([cdir]):
-                if not os.path.exists(os.path.join(cdir, "_SUCCESS")):
-                    return None
-                continue
-            cf = spark.read.parquet(cdir)
-            if not set(keys) <= set(cf.columns):
-                return None
-            del_events.append(
-                (
-                    cf.where(F.col("_change") == "delete")
-                    .select(*keys)
-                    .distinct(),
-                    g - 0.25,
-                )
-            )
-            ins_events.append(
-                (
-                    cf.where(F.col("_change") == "insert").drop("_change"),
-                    float(g),
-                )
-            )
-    for n in batch_names:  # unconsumed-at-g_to window batches
-        if n in covered or n in cons_to or n in cons_from:
-            continue
-        ins_events += [
-            (df, g_to + 0.75) for df in _rd_batches(os.path.join(root, n))
-        ]
-    presence = (
-        reduce(lambda a, b: a.unionByName(b), presence_parts)
-        if presence_parts
-        else None
+    later = consumed(mlog.get(g_to)) | consumed(
+        _read_manifest(root) if os.path.isdir(root) else None
     )
-    return _resolve_change_events(
-        spark, ins_events, del_events, keys, schema, presence
+    if any(inwin(n) and n not in on_disk for n in later - consumed(mlog.get(g_from))):
+        return None  # consumed in window and already vacuumed
+    return _feed_walk(
+        spark, root, mlog, g_from, g_to, key_cols, schema, txn_from,
+        sorted(on_disk - consumed(mlog.get(g_to))),
     )
 
 
@@ -1743,18 +1562,42 @@ def materialize_snapshot_batched(
     itself a batched table under the manifest protocol — the upstream
     snapshot lands as batch dir ``b<gen>`` and the cursor commits.
     See apply_change_feed_batched for why."""
+    _seed_mirror(
+        mv_root,
+        gen,
+        gen,
+        lambda: read_batched_at(spark, root, gen, schema, partitioned=partitioned),
+    )
+
+
+def _seed_mirror(
+    mv_root: str,
+    cursor: int,
+    batch_id: int,
+    snapshot: Callable[[], DataFrame],
+    wipe: bool = False,
+) -> None:
+    """THE seed of a batched mirror (materialize_snapshot_batched,
+    materialize_group_member, reseed_group_member): under the MV lease,
+    write ``snapshot()`` as batch dir ``b<batch_id>`` and commit the
+    cursor at ``cursor``.  Idempotent: a mirror with a cursor is kept —
+    unless ``wipe``, which first removes its batch dirs, tombstones
+    and cursor (the re-seed)."""
     os.makedirs(mv_root, exist_ok=True)
-    if read_mv_cursor(mv_root) is not None:
+    if not wipe and read_mv_cursor(mv_root) is not None:
         return
     with _hold_lease(mv_root, 3600.0):
-        if read_mv_cursor(mv_root) is not None:
-            return
-        idempotent_batch_write(
-            read_batched_at(spark, root, gen, schema, partitioned=partitioned),
-            mv_root,
-            gen,
-        )
-        _commit_mv_cursor(mv_root, gen)
+        if wipe:
+            for d in sorted(os.listdir(mv_root)):
+                p = os.path.join(mv_root, d)
+                if (d.startswith("b") or d == _TOMBSTONES) and os.path.isdir(p):
+                    shutil.rmtree(p, ignore_errors=True)
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(os.path.join(mv_root, _MV_CURSOR))
+        elif read_mv_cursor(mv_root) is not None:
+            return  # a racing seeder finished while we claimed
+        idempotent_batch_write(snapshot(), mv_root, batch_id)
+        _commit_mv_cursor(mv_root, cursor)
 
 
 def apply_change_feed_batched(
@@ -1797,72 +1640,95 @@ def apply_change_feed_batched(
     upstreams use the merge mode.  Replay-idempotent: the insert batch
     overwrites deterministically, a replayed tombstone file is a
     duplicate key set (anti-join unaffected), the cursor is monotone."""
-    cur = read_mv_cursor(mv_root)
-    if cur is None:
-        raise ValueError(
-            f"batched MV {mv_root!r} was never seeded — call "
-            "materialize_snapshot_batched first"
-        )
-    if cur >= gen_to:
-        return cur
-    with _hold_lease(mv_root, lease_ttl_sec):
-        cur = read_mv_cursor(mv_root)
-        if cur is None or cur >= gen_to:
-            return cur if cur is not None else gen_to
+
+    def feed(cur: int) -> DataFrame:
         # the feed is DELTA-sized but its PLAN scans both snapshots —
         # unless the change-file fast path applies (r10:
         # diff_batched_adjacent — a plain-fold window's consumed batch
         # dirs + folded tombstone files ARE the delta, zero snapshot
-        # scans).  Either way, materialize once (localCheckpoint) so
-        # the delete/insert consumers below don't re-run the diff.
-        feed = None
-        if change_files:
-            feed = diff_batched_adjacent(
-                spark, root, cur, gen_to, [key_col], schema
-            )
-        if feed is None:
-            feed = diff_batched(
-                spark, root, cur, gen_to, [key_col], schema,
-                partitioned=partitioned,
-            )
-        feed = feed.localCheckpoint(eager=True)
-        dels = feed.where(F.col("_change") == "delete").select(key_col)
-        ins = feed.where(F.col("_change") == "insert").drop("_change")
+        # scans)
+        fast = (
+            diff_batched_adjacent(spark, root, cur, gen_to, [key_col], schema)
+            if change_files
+            else None
+        )
+        return fast if fast is not None else diff_batched(
+            spark, root, cur, gen_to, [key_col], schema, partitioned=partitioned
+        )
+
+    return _apply_delta_batched(
+        spark, mv_root, gen_to, gen_to, [key_col], feed, lease_ttl_sec,
+        "apply_change_feed_batched", "materialize_snapshot_batched",
+    )
+
+
+def _apply_delta_batched(
+    spark: SparkSession,
+    mv_root: str,
+    to: int,
+    batch_id: int,
+    keys: Sequence[str],
+    feed: Callable[[int], DataFrame],
+    lease_ttl_sec: float,
+    fn: str,
+    seed_fn: str,
+) -> int:
+    """THE delta-batched application (apply_change_feed_batched,
+    apply_group_feed_batched): advance the batched mirror at
+    ``mv_root`` from its cursor to ``to``.  Under the MV lease, with
+    the cursor re-resolved (a consumer that raced us may have advanced
+    it while we waited for the claim): ``feed(cursor)`` is
+    materialized once (localCheckpoint), so the delete/insert
+    consumers below don't re-run it; its deletes append one tombstone
+    file, its inserts land as batch dir ``b<batch_id>``, then the
+    cursor commits.  Errors name the public function ``fn`` (and the
+    seed ``seed_fn`` an unseeded mirror needs)."""
+    cur = read_mv_cursor(mv_root)
+    if cur is None:
+        raise ValueError(
+            f"{fn}: mirror {mv_root!r} was never seeded — call {seed_fn} first"
+        )
+    if cur >= to:
+        return cur
+    with _hold_lease(mv_root, lease_ttl_sec):
+        cur = read_mv_cursor(mv_root)
+        if cur is None or cur >= to:
+            return cur if cur is not None else to
+        fed = feed(cur).localCheckpoint(eager=True)
+        dels = fed.where(F.col("_change") == "delete").select(*keys)
+        ins = fed.where(F.col("_change") == "insert").drop("_change")
         # RESURRECTION GUARD (r10): the keys-never-resurrect contract
         # is ENFORCED at apply time, not just documented — an insert
         # whose key has a PENDING (unfolded) MV tombstone would be
         # served correctly by the read's anti-join until the next fold
         # SILENTLY ERASED it (the fold drops by key).  Delta-sized
-        # check: feed inserts semi-joined against the pending tombstone
-        # keys; a hit is a NAMED error naming sample keys.  A key whose
-        # tombstone was already folded is physically gone and genuinely
+        # check on the full (possibly composite) key: feed inserts
+        # semi-joined against the pending tombstone keys; a hit is a
+        # NAMED error naming sample keys.  A key whose tombstone was
+        # already folded is physically gone and genuinely
         # re-insertable — the guard covers exactly the silent-erasure
         # window.
         if has_tombstones(mv_root):
-            pend = read_tombstones(
-                spark, mv_root, None
-            ).select(key_col).distinct()
-            bad = [
-                r[key_col]
-                for r in ins.select(key_col)
-                .join(F.broadcast(pend), key_col, "left_semi")
+            pend = read_tombstones(spark, mv_root, None)
+            bad = (
+                ins.select(*keys)
+                .join(F.broadcast(pend.select(*keys).distinct()), keys, "left_semi")
                 .limit(5)
                 .collect()
-            ]
+            )
             if bad:
                 raise ValueError(
-                    f"apply_change_feed_batched: feed re-inserts keys "
-                    f"with PENDING tombstones on {mv_root!r} (sample: "
-                    f"{bad}) — the batched MV mode requires "
-                    "keys-never-resurrect (the next fold would silently "
-                    "erase them); use the merge mode (apply_change_feed) "
-                    "for resurrecting upstreams"
+                    f"{fn}: feed re-inserts keys with PENDING tombstones on "
+                    f"{mv_root!r} (sample: {[tuple(r) for r in bad]}) — "
+                    "batched mirrors require keys-never-resurrect (the next "
+                    "fold would silently erase them); use the merge mode "
+                    "(apply_change_feed) for resurrecting upstreams"
                 )
         if dels.limit(1).count():
-            append_tombstones(dels.coalesce(1), mv_root)
-        idempotent_batch_write(ins.coalesce(1), mv_root, gen_to)
-        _commit_mv_cursor(mv_root, gen_to)
-        return gen_to
+            append_tombstones(dels.distinct().coalesce(1), mv_root)
+        idempotent_batch_write(ins.coalesce(1), mv_root, batch_id)
+        _commit_mv_cursor(mv_root, to)
+        return to
 
 
 def read_materialized_batched(
@@ -1912,17 +1778,12 @@ def materialize_group_member(
     are named ``b<txn+1>`` — shifted so the seed txn −1 lands at b0
     and every later feed at its txn's successor, keeping ids natural.
     Idempotent like every seed."""
-    os.makedirs(mv_root, exist_ok=True)
-    if read_mv_cursor(mv_root) is not None:
-        return
-    with _hold_lease(mv_root, 3600.0):
-        if read_mv_cursor(mv_root) is not None:
-            return
-        snap = read_group_at(
-            spark, group_root, txn, alias, schema, partitioned=True
-        )
-        idempotent_batch_write(snap.coalesce(4), mv_root, txn + 1)
-        _commit_mv_cursor(mv_root, txn)
+    _seed_mirror(
+        mv_root,
+        txn,
+        txn + 1,
+        lambda: read_group_at(spark, group_root, txn, alias, schema, partitioned=True),
+    )
 
 
 def reseed_group_member(
@@ -1942,22 +1803,13 @@ def reseed_group_member(
     names after an evolution).  The rebuild costs one snapshot read —
     exactly what Delta consumers pay after a schema-incompatible CDF
     break."""
-    with _hold_lease(mv_root, 3600.0):
-        for d in sorted(os.listdir(mv_root)) if os.path.isdir(mv_root) else []:
-            p = os.path.join(mv_root, d)
-            if d.startswith("b") and os.path.isdir(p):
-                shutil.rmtree(p, ignore_errors=True)
-            elif d == _TOMBSTONES and os.path.isdir(p):
-                shutil.rmtree(p, ignore_errors=True)
-        try:
-            os.remove(os.path.join(mv_root, _MV_CURSOR))
-        except FileNotFoundError:
-            pass
-        snap = read_group_at(
-            spark, group_root, txn, alias, schema, partitioned=True
-        )
-        idempotent_batch_write(snap.coalesce(4), mv_root, txn + 1)
-        _commit_mv_cursor(mv_root, txn)
+    _seed_mirror(
+        mv_root,
+        txn,
+        txn + 1,
+        lambda: read_group_at(spark, group_root, txn, alias, schema, partitioned=True),
+        wipe=True,
+    )
 
 
 def apply_group_feed_batched(
@@ -1981,92 +1833,35 @@ def apply_group_feed_batched(
     member's MV lacks.  Delta artifacts only (insert batch dir named
     ``b<txn_to+1>``, tombstone file, cursor), replay-idempotent, same
     keys-never-resurrect contract as apply_change_feed_batched."""
-    cur = read_mv_cursor(mv_root)
-    if cur is None:
-        raise ValueError(
-            f"group-member mirror {mv_root!r} was never seeded — call "
-            "materialize_group_member first"
-        )
-    if cur >= txn_to:
-        return cur
-    with _hold_lease(mv_root, lease_ttl_sec):
-        cur = read_mv_cursor(mv_root)
-        if cur is None or cur >= txn_to:
-            return cur if cur is not None else txn_to
-        keys = [str(k) for k in key_cols]
-        feed = diff_group_adjacent(
-            spark, group_root, cur, txn_to, alias, keys, schema
-        )
-        if feed is None:
-            # the fallback's endpoints must agree on the member's
-            # schema ops (r11): a rename/drop between the two recorded
-            # generations makes one schema string unable to read both
-            tlog = txn_log(group_root)
+    keys = [str(k) for k in key_cols]
 
-            def _gops(t: int) -> int:
-                mem = (tlog.get(t) or {}).get("tables", {}).get(alias)
-                if mem is None:
-                    return 0
-                mlg = read_manifest_log(mem["root"])
-                e = (mlg.get(int(mem["gen"])) or {}).get("extra")
-                return (
-                    len(e.get("schema_ops") or [])
-                    if isinstance(e, dict)
-                    else 0
-                )
+    def member_rec(t: int) -> dict | None:
+        mem = (txn_log(group_root).get(t) or {}).get("tables", {}).get(alias)
+        return read_manifest_log(mem["root"]).get(int(mem["gen"])) if mem else None
 
-            if _gops(cur) != _gops(txn_to):
-                raise SchemaEvolved(
-                    f"group feed window ({cur}, {txn_to}] of member "
-                    f"{alias!r} crosses a schema-evolution generation "
-                    "— re-seed the mirror from the evolved snapshot"
-                )
-            # sound fallback: keyed diff of the two group-travel views
-            a = read_group_at(
-                spark, group_root, cur, alias, schema, partitioned=True
-            )
-            b = read_group_at(
-                spark, group_root, txn_to, alias, schema, partitioned=True
-            )
-            ins = b.join(a.select(*keys), keys, "left_anti").withColumn(
-                "_change", F.lit("insert")
-            )
-            dels = a.join(b.select(*keys), keys, "left_anti").withColumn(
-                "_change", F.lit("delete")
-            )
-            feed = ins.unionByName(dels)
-        feed = feed.localCheckpoint(eager=True)
-        dels = feed.where(F.col("_change") == "delete").select(*keys)
-        ins = feed.where(F.col("_change") == "insert").drop("_change")
-        # RESURRECTION GUARD (ADVICE r10 low — the same enforcement
-        # apply_change_feed_batched has, on the COMPOSITE key): a feed
-        # insert whose full key has a PENDING mirror tombstone would be
-        # served correctly until the next fold silently erased it.
-        if has_tombstones(mv_root):
-            pend = (
-                read_tombstones(spark, mv_root, None)
-                .select(*keys)
-                .distinct()
-            )
-            bad = (
-                ins.select(*keys)
-                .join(F.broadcast(pend), keys, "left_semi")
-                .limit(5)
-                .collect()
-            )
-            if bad:
-                raise ValueError(
-                    f"apply_group_feed_batched: feed re-inserts keys "
-                    f"with PENDING tombstones on {mv_root!r} (sample: "
-                    f"{[tuple(r) for r in bad]}) — group mirrors require "
-                    "keys-never-resurrect (the next fold would silently "
-                    "erase them)"
-                )
-        if dels.limit(1).count():
-            append_tombstones(dels.distinct().coalesce(1), mv_root)
-        idempotent_batch_write(ins.coalesce(1), mv_root, txn_to + 1)
-        _commit_mv_cursor(mv_root, txn_to)
-        return txn_to
+    def feed(cur: int) -> DataFrame:
+        fast = diff_group_adjacent(spark, group_root, cur, txn_to, alias, keys, schema)
+        if fast is not None:
+            return fast
+        # sound fallback: keyed diff of the two group-travel views
+        _gate_schema_ops(
+            member_rec(cur),
+            member_rec(txn_to),
+            f"group feed window ({cur}, {txn_to}] of member {alias!r}",
+            "mirror",
+        )
+        return _keyed_diff(
+            *[
+                read_group_at(spark, group_root, t, alias, schema, partitioned=True)
+                for t in (cur, txn_to)
+            ],
+            keys,
+        )
+
+    return _apply_delta_batched(
+        spark, mv_root, txn_to, txn_to + 1, keys, feed, lease_ttl_sec,
+        "apply_group_feed_batched", "materialize_group_member",
+    )
 
 
 def prune_materialized(mv_root: str, keep_last_n: int) -> list[int]:

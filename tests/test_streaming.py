@@ -6358,6 +6358,71 @@ def test_mixed_window_feed_keeps_multirow_keys(spark, tmpdir):
     )
 
 
+def test_feed_keeps_column_added_mid_window(spark, tmpdir):
+    """A column added by a plain fold AFTER a change-file rebucket
+    must reach the feed with ``schema=None`` whichever window serves
+    it: the all-plain window (2, 3) and the mixed window (1, 3) carry
+    the same 20 inserts, and the snapshot diff over either window
+    unions its inserts and deletes across the additive column."""
+    from mo_etl_spark import streaming as S
+
+    root = f"{tmpdir}/addcol"
+
+    def kdf(lo, hi, n=4):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("k"), F.pmod("id", F.lit(n)).alias("ib")
+        )
+
+    def compact(**kw):
+        S.compact_batched(
+            spark, root, min_dirs=0, partition_cols=["ib"],
+            gc_grace_sec=3600.0, **kw,
+        )
+
+    S.idempotent_batch_write(kdf(0, 200), root, 0, partition_cols=["ib"])
+    S.stamp_spec(root, 0, 4)
+    compact()  # gen1, plain: (k, ib)
+    S.idempotent_batch_write(kdf(1000, 1050), root, 1, partition_cols=["ib"])
+    S.stamp_spec(root, 1, 4)
+    S.append_tombstones(
+        spark.createDataFrame([(k,) for k in range(0, 200, 10)], "k BIGINT"),
+        root,
+    )
+    compact(
+        tombstone_col="k", change_feed=True,
+        transform=S.rebucket_transform(
+            "ib", lambda n: F.pmod("k", F.lit(n)), 4,
+            cap_rows=10, prior_extra=S.read_manifest_extra(root),
+        ),
+    )  # gen2: transform with change file
+    n_new = S.current_spec(root, 4)
+    S.idempotent_batch_write(
+        kdf(2000, 2020, n_new).withColumn("x", F.col("k") * 3),
+        root, 2, partition_cols=["ib"],
+    )
+    compact()  # gen3, plain: (k, ib, x)
+
+    want = [(k, 3 * k) for k in range(2000, 2020)]
+
+    def added(feed):
+        rows = feed.collect()
+        return set(feed.columns), sorted(
+            (r["k"], r["x"])
+            for r in rows
+            if r["_change"] == "insert" and r["k"] >= 2000
+        )
+
+    cols = {"k", "ib", "x", "_change"}
+    for lo in (2, 1):
+        fast = S.diff_batched_adjacent(spark, root, lo, 3, ["k"], None)
+        assert fast is not None
+        assert added(fast) == (cols, want), lo
+        slow = S.diff_batched(
+            spark, root, lo, 3, ["k"], None, partitioned=True
+        )
+        assert added(slow) == (cols, want), lo
+
+
 @pytest.mark.parametrize("seed", [7, 19, 31, 43])
 def test_txn_retention_cdf_threaded_model(spark, tmpdir, seed):
     """RETENTION + CHANGE-FILE threaded interleaving model (r11 — the

@@ -31,9 +31,12 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from mo_etl_spark.session import ENGINE_ROOT  # noqa: E402
+
 DELTA_INS = 5_000
 DELTA_DEL = 2_000
-SCRATCH = "/tmp/scale_cdf"
+#: this tool's upstream tables and mirrors; removed when the run ends
+SCRATCH = os.path.join(ENGINE_ROOT, ".scratch", "scale_cdf")
 
 
 def build_upstream(spark, root: str, n: int) -> None:

@@ -27,7 +27,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SCRATCH = "/tmp/scale_evolve"
+from mo_etl_spark.session import ENGINE_ROOT  # noqa: E402
+
+#: this tool's tables; removed when the run ends
+SCRATCH = os.path.join(ENGINE_ROOT, ".scratch", "scale_evolve")
 
 
 def build(spark, root: str, n: int) -> None:
@@ -109,6 +112,7 @@ def main() -> None:
         if rec.get("small_sec"):
             rec["ratio30"] = round(rec["large_sec"] / rec["small_sec"], 2)
     print(json.dumps({"ops": out}))
+    shutil.rmtree(SCRATCH, ignore_errors=True)
 
 
 if __name__ == "__main__":
