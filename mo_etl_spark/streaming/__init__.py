@@ -4399,21 +4399,21 @@ def foreach_batch_etl(
     transform: Callable[[DataFrame, int], DataFrame],
     sink: Callable[[DataFrame, int], None],
     checkpoint: str,
-    trigger_available_now: bool = True,
 ) -> StreamingQuery:
     """Per-microbatch transform+sink — the ActiveData block-ETL shape
     (u: transform(source_key, source, dest) per S3 block) with
-    exactly-once bookkeeping via the checkpoint dir."""
+    exactly-once bookkeeping via the checkpoint dir, run as an
+    availableNow backfill."""
 
     def run(batch_df: DataFrame, batch_id: int) -> None:
         sink(transform(batch_df, batch_id), batch_id)
 
-    writer = stream_df.writeStream.foreachBatch(run).option(
-        "checkpointLocation", checkpoint
+    return (
+        stream_df.writeStream.foreachBatch(run)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stateful_count(

@@ -1314,6 +1314,27 @@ def test_retract_contract_query_erases_both_tables(spark):
     assert not has_tombstones(idx) and not has_tombstones(arr)
 
 
+@pytest.mark.parametrize(
+    "name, ckpt",
+    [
+        ("stream_real_append_closed_windows", "append_closed_ckpt"),
+        ("stream_real_incremental_dedup", "incr_dedup_ckpt"),
+    ],
+)
+def test_drained_query_leaves_no_checkpoint(spark, sf_dir, name, ckpt):
+    """A bounded backfill replays its whole feed from a fresh
+    checkpoint on every run, so the checkpoint is removed once the feed
+    is drained: a memory-sink query and a file-feed foreachBatch query
+    each leave no ``<ckpt>-*`` dir under the stream scratch root."""
+    import glob
+
+    from mo_etl_spark.registry import all_queries
+
+    assert all_queries()[name].fn(spark, sf_dir).count() > 0
+    scratch = os.path.join(CACHE_ROOT, "stream_scratch")
+    assert glob.glob(os.path.join(scratch, f"{ckpt}-*")) == []
+
+
 def test_manifest_extra_carried_by_transformless_compaction(spark, tmpdir):
     """r7: a compaction WITHOUT a transform must carry the previous
     generation's manifest ``extra`` forward — its rows are preserved
